@@ -1,15 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.canon.Canonicalizer
-import graft.cc.ConnectedComponents
 import graft.extract.MentionExtractor
 import graft.link.Linker
 import graft.schema._
 import graft.snapshot.SnapshotStore
-import graft.superedge.SuperEdges
 import graft.synth.TranscriptSynth
 
 /**
@@ -28,7 +24,8 @@ import graft.synth.TranscriptSynth
  * partition row counts in the manifest; a re-run resumes from the
  * last completed stage (the reference's user-selected step-range
  * restartability, /root/reference/update_kg/update_kg.py:17-35, made
- * automatic). Stage list mirrors Updater.run_all order (SURVEY §3.1).
+ * automatic). The stages are [[Pipeline.run]]'s own stage graph
+ * ([[Pipeline.stages]]), materialized through [[Pipeline.Snapshots]].
  */
 object Main {
 
@@ -66,22 +63,26 @@ object Main {
     } else spark.read.parquet(input).as[Turn]
   }
 
-  /** The tagged-union KE extraction frame over `turns` — the same
-    * single-flatMap shape Pipeline.run uses, exposed so the batch
-    * ([[runResumable]]) and streaming
-    * ([[graft.streaming.IncrementalKg]]) faces extract identically. */
+  /** The tagged-union KE extraction frame over `turns`: ONE extraction
+    * pass emitting a flat tagged row per KE (1 mention, 2 statement,
+    * 3 error, 4 event, 5 event arg), which the stage graph then carves
+    * with columnar filter+project (no object round-trip, no second
+    * extraction pass, no nested Seq cache). Shared by [[Pipeline.run]],
+    * [[runResumable]] and [[graft.streaming.IncrementalKg]], so every
+    * face extracts identically. */
   def extractKe(turns: Dataset[Turn]): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.flatMap { t =>
       val k = MentionExtractor.extractTurn(t)
-      k.mentions.iterator.map(m => (1, m, null: Statement, null: EventArg, null: String)).toSeq ++
-        k.statements.iterator.map(s => (2, null: Mention, s, null: EventArg, null: String)) ++
-        k.events.iterator.map(m => (4, m, null: Statement, null: EventArg, null: String)) ++
-        k.eventArgs.iterator.map(a => (5, null: Mention, null: Statement, a, null: String)) ++
-        (if (k.error != null)
-           Seq((3, null: Mention, null: Statement, null: EventArg, k.error))
-         else Nil)
+      val ms = k.mentions.iterator.map(m => (1, m, null: Statement, null: EventArg, null: String))
+      val ss = k.statements.iterator.map(s => (2, null: Mention, s, null: EventArg, null: String))
+      val evs = k.events.iterator.map(m => (4, m, null: Statement, null: EventArg, null: String))
+      val eas = k.eventArgs.iterator.map(a => (5, null: Mention, null: Statement, a, null: String))
+      val es = if (k.error != null)
+        Iterator((3, null: Mention, null: Statement, null: EventArg, k.error))
+      else Iterator.empty
+      (ms ++ ss ++ evs ++ eas ++ es).toSeq
     }.toDF("tag", "m", "s", "a", "error")
   }
 
@@ -131,95 +132,41 @@ object Main {
     kgStages(spark, ke, store, fp, linkCfg)
   }
 
-  /** Every stage DOWNSTREAM of extraction, from the tagged KE frame to
-    * the triples — shared verbatim by the batch resume path (ke = one
-    * snapshot of the whole corpus) and the streaming incremental path
-    * (ke = the union of the append-log's delta snapshots; the caller
-    * keys `fp` to the log head so advancing the log recomputes and an
-    * idempotent re-fire resumes). Returns the triple count. */
-  def kgStages(spark: SparkSession, ke: DataFrame, store: SnapshotStore,
-      fp: String, linkCfg: Linker.Config): Long = {
-    import spark.implicits._
-    val mentions = ke.filter(col("tag") === 1).select(col("m.*")).as[Mention]
-    val statements = ke.filter(col("tag") === 2).select(col("s.*")).as[Statement]
-    val events = ke.filter(col("tag") === 4).select(col("m.*")).as[Mention]
-    val eventArgs = ke.filter(col("tag") === 5).select(col("a.*"))
-
-    val surf = store.getOrCreate(spark, "surfaces", fp)(Linker.surfaces(mentions))
-    val edges = store.getOrCreate(spark, "match_edges", fp) {
-      // reuse the surfaces snapshot instead of recomputing it
-      Linker.matchEdgesFrom(surf, linkCfg).toDF()
-    }
-    val comp = store.getOrCreate(spark, "components", fp)(ConnectedComponents.run(edges))
-    val surfClusters = store.getOrCreate(spark, "surface_clusters", fp) {
-      Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp))
-    }
-    // the same dictionary-size gate Pipeline.run applies: broadcast
-    // hints only while the surface dictionary fits the broadcast
-    // threshold; above it, salted (memberships) / un-hinted shuffle
-    // (prototypes) paths
-    val dictFits = surfClusters.count() <= Pipeline.SaltedMembershipRows
-    val memberships = store.getOrCreate(spark, "memberships", fp) {
-      (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)
-       else Canonicalizer.membershipsSalted(mentions, surfClusters)).toDF()
-    }.as[Membership]
-    val prototypes = store.getOrCreate(spark, "prototypes", fp) {
-      Canonicalizer.prototypes(mentions, surfClusters, broadcastDict = dictFits).toDF()
-    }.as[Prototype]
-    val superEdges = store.getOrCreate(spark, "superedges", fp) {
-      SuperEdges.superEdges(statements, memberships).toDF()
-    }.as[SuperEdge]
-    val triples = store.getOrCreate(spark, "triples", fp) {
-      SuperEdges.namedTriples(superEdges, prototypes).toDF()
-    }
-    // event coreference (the reference's aida:Event cluster kind,
-    // Updater.py:133) — after entity clustering, arguments resolve at
-    // cluster level
-    val eventClusters = store.getOrCreate(spark, "event_clusters", fp) {
-      graft.canon.EventCoref.keyedEvents(events, eventArgs, memberships)
-    }
-    store.getOrCreate(spark, "event_prototypes", fp) {
-      graft.canon.EventCoref.prototypes(eventClusters).toDF()
-    }
-    store.getOrCreate(spark, "event_cluster_justifications", fp) {
-      // same informative-justification rule, third cluster kind: event
-      // members are mentions with trigger spans
-      graft.canon.Justifications.informativeJustifications(
-        graft.canon.EventCoref.memberships(eventClusters), events)
-    }
-    // relation clusters + justification/link aggregation + copy-backs
-    // (reference run_all steps 6-8 and the proto/superedge
-    // justification inserts, Updater.py:222-256, sparqls.py:391-527)
-    store.getOrCreate(spark, "relation_clusters", fp) {
-      // superedge-count reuse: n_members comes from the superedges
-      // snapshot, so the statements⋈memberships² joins run once
-      graft.canon.RelationClusters.cluster(statements, memberships, superEdges)
-    }
-    store.getOrCreate(spark, "cluster_justifications", fp) {
-      graft.canon.Justifications.informativeJustifications(memberships, mentions)
-    }
-    store.getOrCreate(spark, "cluster_links", fp) {
-      graft.canon.Justifications.clusterLinks(memberships, mentions)
-    }
-    store.getOrCreate(spark, "proto_justifications", fp) {
-      graft.canon.Justifications.prototypeJustifications(memberships, mentions, prototypes)
-    }
-    // the two remaining reference copy-backs (proto_inf_just /
-    // proto_type_assertion_justi, sparqls.py:413-454) — emitted, not
-    // just implemented
-    store.getOrCreate(spark, "proto_inf_justifications", fp) {
-      graft.canon.Justifications.prototypeInformativeJustifications(
-        memberships, mentions, prototypes)
-    }
-    store.getOrCreate(spark, "proto_type_justifications", fp) {
-      graft.canon.Justifications.prototypeTypeAssertionJustifications(
-        memberships, mentions, prototypes)
-    }
-    store.getOrCreate(spark, "superedge_justifications", fp) {
-      graft.canon.Justifications.superEdgeJustifications(statements, memberships)
-    }
-    triples.count()
+  /** Every stage DOWNSTREAM of extraction: the stage graph
+    * [[Pipeline.run]] runs ([[Pipeline.stages]]) with its named stages
+    * materialized as snapshots, then `triples` and the ten lazy outputs
+    * each snapshotted under its stage name. Shared by the batch resume
+    * path (ke = one snapshot of the whole corpus) and the streaming
+    * incremental path (ke = the union of the append-log's delta
+    * snapshots; the caller keys `fp` to the log head so advancing the
+    * log recomputes and an idempotent re-fire resumes). Returns the
+    * triple count. */
+  private[graft] def kgStages(spark: SparkSession, ke: DataFrame, store: SnapshotStore,
+      fp: String, linkCfg: Linker.Config,
+      saltedMembershipRows: Long = Pipeline.SaltedMembershipRows): Long = {
+    val r = Pipeline.stages(ke, new Pipeline.Snapshots(spark, store, fp), linkCfg,
+      saltedMembershipRows)
+    outputStages(r).foreach { case (stage, df) => store.getOrCreate(spark, stage, fp)(df) }
+    r.unpersist()
+    store.read(spark, "triples").get.count()
   }
+
+  /** The graph's lazy outputs under their snapshot stage names, in the
+    * reference's run_all order (events, relations, then the
+    * justification/link aggregation and copy-backs, Updater.py:222-256,
+    * sparqls.py:391-527). */
+  private[graft] def outputStages(r: Pipeline.Result): Seq[(String, DataFrame)] = Seq(
+    "triples" -> r.triples.toDF(),
+    "event_clusters" -> r.eventClusters,
+    "event_prototypes" -> r.eventPrototypes.toDF(),
+    "event_cluster_justifications" -> r.eventClusterJustifications,
+    "relation_clusters" -> r.relationClusters,
+    "cluster_justifications" -> r.informativeJustifications,
+    "cluster_links" -> r.clusterLinks,
+    "proto_justifications" -> r.protoJustifications,
+    "proto_inf_justifications" -> r.protoInfJustifications,
+    "proto_type_justifications" -> r.protoTypeJustifications,
+    "superedge_justifications" -> r.superEdgeJustifications)
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.canon.{Canonicalizer, EventCoref, Justifications, RelationClusters}
 import graft.cc.ConnectedComponents
-import graft.extract.MentionExtractor
 import graft.link.Linker
 import graft.schema._
+import graft.snapshot.SnapshotStore
 import graft.superedge.SuperEdges
 
 /**
@@ -19,19 +19,17 @@ import graft.superedge.SuperEdges
  * components → canonicalize (clusters/prototypes/singletons) →
  * superedges → corpus triples.
  *
- * Every stage is a pure Dataset→Dataset transform; stage boundaries
- * are plain DataFrames so callers can snapshot/resume between them
- * (graft.snapshot). Where the reference round-trips HTTP per 1000
- * triples, ours crosses machines only at Spark shuffles.
+ * The stage graph ([[stages]]) is written once, against a
+ * [[Materializer]]: [[run]] materializes its boundaries in-session,
+ * [[graft.Main]] and [[graft.streaming.IncrementalKg]] as resumable
+ * snapshots. Where the reference round-trips HTTP per 1000 triples,
+ * ours crosses machines only at Spark shuffles.
  */
 object Pipeline {
 
-  /** Full pipeline output. Core stages (through `triples`) are
-    * materialized at stage boundaries; the event / relation /
-    * justification outputs are LAZY plans over those checkpointed
-    * stages — consumers that don't need them (e.g. the throughput
-    * bench's triple count) pay nothing, and consumers that do get
-    * plans rooted at materialized data, not at re-extraction. */
+  /** Full pipeline output: the named stages and cuts materialized by
+    * the run's [[Materializer]], `triples` and the event / relation /
+    * justification outputs LAZY plans over them (see [[stages]]). */
   final case class Result(
       mentions: Dataset[Mention],
       statements: Dataset[Statement],
@@ -84,6 +82,22 @@ object Pipeline {
         relationClusters, informativeJustifications, clusterLinks,
         protoJustifications, superEdgeJustifications, annotatedMembers))
     }
+
+    /** The informative-justification rule over the third cluster kind:
+      * event members are mentions with trigger spans. */
+    def eventClusterJustifications: DataFrame =
+      Justifications.informativeJustifications(eventMemberships, events)
+
+    /** The reference's `proto_inf_just` copy-back
+      * (update_kg/sparqls.py:413-430). */
+    def protoInfJustifications: DataFrame =
+      Justifications.prototypeInformativeJustificationsFrom(
+        informativeJustifications, prototypes)
+
+    /** The reference's `proto_type_assertion_justi` copy-back
+      * (update_kg/sparqls.py:433-454). */
+    def protoTypeJustifications: DataFrame =
+      Justifications.prototypeTypeAssertionJustifications(memberships, mentions, prototypes)
   }
 
   /** Rows above which the surface dictionary is assumed to exceed the
@@ -102,83 +116,103 @@ object Pipeline {
   private def timedStage[T](name: String)(f: => T): T =
     graft.util.StageTiming.timed(name)(f)
 
-  def run(turns: Dataset[Turn], linkCfg: Linker.Config = Linker.Config(),
-      saltedMembershipRows: Long = SaltedMembershipRows): Result = {
-    val spark = turns.sparkSession
-    import spark.implicits._
+  /** The stage graph's materialization boundary. [[stages]] is written
+    * once against it; the two implementations decide only where a
+    * boundary lands — in-session blocks ([[InSession]]) or snapshots
+    * ([[Snapshots]]). */
+  trait Materializer {
+    /** A named stage, `ke` through `superedges`. `materialized`: the
+      * builder's operator already returns its frame checkpointed. */
+    def stage(name: String, materialized: Boolean = false)(build: => DataFrame): DataFrame
+    /** An in-session-only cut: the extraction carves and the shared
+      * resolved-statement frame. */
+    def cut(df: DataFrame): DataFrame
+  }
 
-    // Stage boundaries are MATERIALIZED (eager localCheckpoint), not
-    // merely cached: persist keeps the full logical plan, so every
-    // downstream action re-analyzes/re-optimizes a tree that grows
-    // with each stage (profiling showed driver planning + nested
-    // encode/decode dominating, not data work). Checkpointing is also
-    // the in-session analog of the snapshot-per-stage design the
-    // reference's step-resumable pipeline implies (SURVEY.md §3.1,
-    // §4.3.5) — on a cluster these boundaries are SnapshotStore
-    // parquet snapshots.
-    // ONE extraction pass emitting a flat tagged row per KE; mentions/
-    // statements/events/args/errors are then carved out with columnar
-    // filter+project (no object round-trip, no second extraction pass,
-    // no nested Seq cache).
-    val ke = timedStage("ke_checkpoint") { turns.flatMap { t =>
-      val k = MentionExtractor.extractTurn(t)
-      val ms = k.mentions.iterator.map(m => (1, m, null: Statement, null: EventArg, null: String))
-      val ss = k.statements.iterator.map(s => (2, null: Mention, s, null: EventArg, null: String))
-      val evs = k.events.iterator.map(m => (4, m, null: Statement, null: EventArg, null: String))
-      val eas = k.eventArgs.iterator.map(a => (5, null: Mention, null: Statement, a, null: String))
-      val es = if (k.error != null)
-        Iterator((3, null: Mention, null: Statement, null: EventArg, k.error))
-      else Iterator.empty
-      (ms ++ ss ++ evs ++ eas ++ es).toSeq
-    }.toDF("tag", "m", "s", "a", "error").localCheckpoint(true) }
-    // CARVE the tagged union into four NARROW checkpoints immediately:
-    // checkpoint scans can't prune columns (ExistingRDD materializes
-    // full rows), so every downstream join/agg over e.g. `statements`
-    // would otherwise re-decode the full 5-column nested-struct row for
-    // every KE of every kind — profiled at ~200 executor-s per
-    // statements scan at 2M turns. Four cheap filter+project passes
-    // here buy narrow rows for every later consumer; the wide union is
-    // then dead and its blocks are dropped.
-    // the five carves are INDEPENDENT full scans of the same
-    // checkpointed blocks — submit them concurrently so they overlap
-    // (guide §2.6): wall ≈ the slowest scan, not the sum of five
+  /** Eager localCheckpoint at every boundary, [[run]]'s materializer.
+    * Materialized, not merely cached: persist keeps the full logical
+    * plan, so every downstream action re-analyzes/re-optimizes a tree
+    * that grows with each stage (profiling showed driver planning +
+    * nested encode/decode dominating, not data work). This is the
+    * in-session analog of the snapshot-per-stage design the
+    * reference's step-resumable pipeline implies (SURVEY.md §3.1,
+    * §4.3.5). */
+  object InSession extends Materializer {
+    def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
+      timedStage(name) { if (materialized) build else build.localCheckpoint(true) }
+    def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
+  }
+
+  /** Every named stage resumes from, or is written as, a
+    * [[SnapshotStore]] snapshot under fingerprint `fp`. Cuts stay lazy
+    * plans over the snapshots: parquet scans already prune columns, and
+    * a checkpointed cut shared by two stages would be freed under the
+    * later one, because `getOrCreate` releases every checkpoint its
+    * builder pinned. */
+  final class Snapshots(spark: SparkSession, store: SnapshotStore, fp: String)
+      extends Materializer {
+    def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
+      store.getOrCreate(spark, name, fp)(build)
+    def cut(df: DataFrame): DataFrame = df
+  }
+
+  def run(turns: Dataset[Turn], linkCfg: Linker.Config = Linker.Config(),
+      saltedMembershipRows: Long = SaltedMembershipRows): Result =
+    stages(InSession.stage("ke")(Main.extractKe(turns)), InSession, linkCfg,
+      saltedMembershipRows)
+
+  /** The KG stage graph from the tagged KE frame (`ke`, already a stage
+    * boundary) to every output, materialized through `m`. The named
+    * stages and cuts are materialized; `triples` and everything
+    * downstream are lazy plans over them — consumers that don't need
+    * them pay nothing, and consumers that do get plans rooted at
+    * materialized data, not at re-extraction. */
+  private[graft] def stages(ke: DataFrame, m: Materializer,
+      linkCfg: Linker.Config, saltedMembershipRows: Long): Result = {
+    val spark = ke.sparkSession
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+
+    // CARVE the tagged union into NARROW frames immediately: checkpoint
+    // scans can't prune columns (ExistingRDD materializes full rows), so
+    // every downstream join/agg over e.g. `statements` would otherwise
+    // re-decode the full 5-column nested-struct row for every KE of
+    // every kind — profiled at ~200 executor-s per statements scan at
+    // 2M turns. The five carves are INDEPENDENT full scans of the same
+    // blocks — submitted concurrently so they overlap (guide §2.6):
+    // wall ≈ the slowest scan, not the sum of five.
     val (mentions, statements, errors, events, eventArgs) =
       timedStage("carve_all") {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fM = Future(ke.filter(col("tag") === 1).select(col("m.*"))
-          .localCheckpoint(true).as[Mention])
-        val fS = Future(ke.filter(col("tag") === 2).select(col("s.*"))
-          .localCheckpoint(true).as[Statement])
-        val fErr = Future(ke.filter(col("tag") === 3).select(col("error"))
-          .localCheckpoint(true))
-        val fEv = Future(ke.filter(col("tag") === 4).select(col("m.*"))
-          .localCheckpoint(true).as[Mention])
-        val fA = Future(ke.filter(col("tag") === 5).select(col("a.*"))
-          .localCheckpoint(true))
-        (Await.result(fM, Duration.Inf), Await.result(fS, Duration.Inf),
-          Await.result(fErr, Duration.Inf), Await.result(fEv, Duration.Inf),
-          Await.result(fA, Duration.Inf))
+        def carve(tag: Int, cols: String) =
+          Future(m.cut(ke.filter(col("tag") === tag).select(col(cols))))
+        val (fM, fS, fErr, fEv, fA) =
+          (carve(1, "m.*"), carve(2, "s.*"), carve(3, "error"), carve(4, "m.*"), carve(5, "a.*"))
+        (await(fM).as[Mention], await(fS).as[Statement], await(fErr),
+          await(fEv).as[Mention], await(fA))
       }
+    // the wide union is dead once carved; a snapshot scan pins nothing
     graft.util.Blocks.release(ke)
 
-    val (surf, edges) = timedStage("linker_matchEdges") { Linker.matchEdges(mentions, linkCfg) } // surf checkpointed inside
-    val comp = timedStage("cc") { ConnectedComponents.run(edges.toDF()) }
+    val surf = m.stage("surfaces")(Linker.surfaces(mentions))
+    val edges = m.stage("match_edges", materialized = true) {
+      Linker.matchEdgesFrom(surf, linkCfg).toDF() }
+    val comp = m.stage("components", materialized = true)(ConnectedComponents.run(edges))
     // the edge list's checkpoint blocks are dead once CC has consumed
     // them (CC's first round materialized the symmetric copy); its
     // truncated plan holds no other frame's blocks, so this frees only
     // the edges themselves
-    graft.util.Blocks.release(edges.toDF())
-    val surfClusters = timedStage("surfClusters") { Canonicalizer
-      .withKind(Canonicalizer.surfaceClusters(surf, comp))
-      .localCheckpoint(true) }
+    graft.util.Blocks.release(edges)
+    val surfClusters = m.stage("surface_clusters") {
+      Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp)) }
 
     // size-based auto-switch: below the threshold the surface dict
     // broadcasts (Catalyst picks BroadcastHashJoin from the compact
-    // checkpointed stats); above it the explicit salted join defuses
+    // materialized stats); above it the explicit salted join defuses
     // the hot-surface key before the sort-merge shuffle.
-    val nSurfaces = timedStage("nSurfaces_count") { surfClusters.count() } // checkpointed → cheap metadata-ish scan
+    val nSurfaces = timedStage("nSurfaces_count") { surfClusters.count() }
     val dictFits = nSurfaces <= saltedMembershipRows
     // prototype/cluster cardinality ≤ nSurfaces — a MEASURED gate for
     // broadcasting the compact prototype side into its two join-backs
@@ -195,16 +229,13 @@ object Pipeline {
     // groupBy's partial agg absorbs the hot surface either way).
     val (memberships, resolvedStmts, superEdges, superEdgesFit, prototypes) =
       timedStage("memberships_to_superedges_and_prototypes") {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fMem = Future(timedStage("memberships") {
+        val fMem = Future(m.stage("memberships") {
           (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)
-           else Canonicalizer.membershipsSalted(mentions, surfClusters))
-            .localCheckpoint(true) })
-        // ONE statements⋈memberships² resolution, checkpointed, shared
-        // by THREE consumers (superedges here; relation clusters and
-        // superedge justifications below). Before round 6 each consumer
+           else Canonicalizer.membershipsSalted(mentions, surfClusters)).toDF()
+        }.as[Membership])
+        // ONE statements⋈memberships² resolution, shared by THREE
+        // consumers (superedges here; relation clusters and superedge
+        // justifications below). Before round 6 each consumer
         // re-executed the two corpus-scale merge joins — 4 extra
         // mention-scale shuffles per full-output run (guide §2.4; A/B
         // in OPTIMIZATION_r06.md). Under dictFits the two membership
@@ -213,47 +244,44 @@ object Pipeline {
         // the chain does not wait on memberships at all.
         val fChain = Future {
           val resolved = timedStage("resolved_statements") {
-            (if (dictFits)
-               SuperEdges.resolvedStatementsViaDict(statements, surfClusters)
-             else SuperEdges.resolvedStatements(statements,
-               Await.result(fMem, Duration.Inf)))
-              .localCheckpoint(true) }
-          val se = timedStage("superEdges") {
-            SuperEdges.superEdgesFromResolved(resolved).localCheckpoint(true) }
+            m.cut(if (dictFits)
+                SuperEdges.resolvedStatementsViaDict(statements, surfClusters)
+              else SuperEdges.resolvedStatements(statements, await(fMem))) }
+          val se = m.stage("superedges") {
+            SuperEdges.superEdgesFromResolved(resolved).toDF() }.as[SuperEdge]
           // measured (not estimated) relation-cluster count for the
-          // count-join strategy below — a cheap scan of the checkpoint
+          // count-join strategy below — a cheap scan of the stage
           val fit = timedStage("superEdges_count") {
             se.count() } <= BroadcastableAggRows
           (resolved, se, fit)
         }
-        val fProto = Future(timedStage("prototypes") { Canonicalizer
-          .prototypes(mentions, surfClusters, broadcastDict = dictFits)
-          .localCheckpoint(true) })
-        val (resolved, se, fit) = Await.result(fChain, Duration.Inf)
-        (Await.result(fMem, Duration.Inf), resolved, se, fit,
-          Await.result(fProto, Duration.Inf))
+        val fProto = Future(m.stage("prototypes") {
+          Canonicalizer.prototypes(mentions, surfClusters, broadcastDict = dictFits).toDF()
+        }.as[Prototype])
+        val (resolved, se, fit) = await(fChain)
+        (await(fMem), resolved, se, fit, await(fProto))
       }
     val triples = SuperEdges.namedTriples(superEdges, prototypes,
       broadcastNames = protosFit)
 
     // event coreference runs AFTER entity clustering (argument
-    // identity is cluster-level) — lazy plans over checkpointed
-    // inputs. Under the dictFits gate the args resolve through the
-    // broadcast surface dictionary (EventArg carries the surface key
-    // from extraction) instead of sort-merging against corpus-scale
-    // memberships — identical clusters, two fewer mention-scale
-    // shuffle+sorts (guide §8; parity pinned in EventGoldenSpec).
+    // identity is cluster-level). Under the dictFits gate the args
+    // resolve through the broadcast surface dictionary (EventArg
+    // carries the surface key from extraction) instead of sort-merging
+    // against corpus-scale memberships — identical clusters, two fewer
+    // mention-scale shuffle+sorts (guide §8; parity pinned in
+    // EventGoldenSpec).
     val eventKeyed =
       if (dictFits) EventCoref.keyedEventsViaDict(events, eventArgs, surfClusters)
       else EventCoref.keyedEvents(events, eventArgs, memberships)
     val eventMemberships = EventCoref.memberships(eventKeyed)
     val eventPrototypes = EventCoref.prototypes(eventKeyed)
 
-    // superedge-count reuse: the checkpointed superedge aggregate IS the
+    // superedge-count reuse: the superedge aggregate IS the
     // per-relation-cluster member count, and the member rows read the
-    // shared resolved-statement checkpoint — zero joins re-executed;
-    // under the measured-count gate the count side broadcasts, so the
-    // member rows never shuffle at all
+    // shared resolved-statement frame — zero joins re-executed; under
+    // the measured-count gate the count side broadcasts, so the member
+    // rows never shuffle at all
     val relationClusters = RelationClusters.clusterFromResolved(
       resolvedStmts, superEdges, broadcastCounts = superEdgesFit)
     // the three cluster-level justification/link outputs share ONE
@@ -261,9 +289,9 @@ object Pipeline {
     // straight from the broadcast dictionary join (zero mention-scale
     // shuffles — the memberships⋈mentions sort-merge the generic path
     // pays is algebraically redundant there), and is NOT persisted:
-    // each consumer's plan is a checkpoint scan + broadcast hash join,
-    // cheaper than writing a mention-scale cache and re-reading it,
-    // and concurrent consumers stop serializing on the cache build.
+    // each consumer's plan is a materialized scan + broadcast hash
+    // join, cheaper than writing a mention-scale cache and re-reading
+    // it, and concurrent consumers stop serializing on the cache build.
     // The salted/oversized-dictionary path keeps the generic merge
     // join and the shared persist (there the join IS expensive).
     val annotated =

@@ -138,7 +138,14 @@ object Justifications {
     * justification (A3) keyed by the prototype. */
   def prototypeInformativeJustifications(memberships: Dataset[Membership],
       mentions: Dataset[Mention], prototypes: Dataset[Prototype]): DataFrame =
-    informativeJustifications(memberships, mentions)
+    prototypeInformativeJustificationsFrom(
+      informativeJustifications(memberships, mentions), prototypes)
+
+  /** [[prototypeInformativeJustifications]] over precomputed
+    * [[informativeJustifications]] rows. */
+  def prototypeInformativeJustificationsFrom(informative: DataFrame,
+      prototypes: Dataset[Prototype]): DataFrame =
+    informative
       .join(prototypes.toDF().select(col("cluster_id"), col("prototype_id")),
         "cluster_id")
       .select(col("prototype_id"), col("cluster_id"), col("conv_id"),

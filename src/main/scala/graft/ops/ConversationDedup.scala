@@ -49,9 +49,8 @@ object ConversationDedup {
     val g = docs.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
     require(g.getLong(0) == g.getLong(1),
       s"conv_id hash collision: ${g.getLong(0)} conversations, ${g.getLong(1)} distinct doc ids")
-    // BOILERPLATE-REGIME TUNING (measured, tools/Scratch dedupdiag at
-    // 267k convs): conversation docs share templated turns, so the
-    // default b=8×r=2 banding (S-curve knee j≈0.35) makes nearly every
+    // BOILERPLATE-REGIME TUNING (measured at 267k convs): conversation
+    // docs share templated turns, so the default b=8×r=2 banding (S-curve knee j≈0.35) makes nearly every
     // conv pair a candidate — 54M pairs for 267k convs, 74 GB of
     // candidate shuffle at 2.67M. Re-ingestion dedup targets j ≥ 0.9:
     // r=4 (knee ≈ 0.71) cuts candidates 25×, maxBucketSize=256 caps

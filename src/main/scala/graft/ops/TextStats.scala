@@ -57,7 +57,8 @@ object TextStats {
 
   /** N-gram/stopword-heuristic language ID: score = padded stopword
     * hit count per language; argmax with 'en' fallback on all-zero.
-    * ONE native kernel call per row (graft_langid, round 6): the
+    * NULL text has no language: NULL in → NULL out (an empty string
+    * is text, all-zero, → 'en'). ONE native kernel call per row (graft_langid, round 6): the
     * length-minus-replace chain allocated 16 intermediate strings per
     * row; the kernel counts the same non-overlapping occurrences with
     * zero allocation. Values identical (parity test + oracle). */
@@ -75,7 +76,8 @@ object TextStats {
     }
     docs.select(
       col("doc_id"),
-      when(greatest(scores.map(_.getField("score")): _*) === 0, lit("en"))
+      when(col("text").isNull, lit(null).cast("string"))
+        .when(greatest(scores.map(_.getField("score")): _*) === 0, lit("en"))
         .otherwise(greatest(scores: _*).getField("lang"))
         .as("pred_lang"))
   }

@@ -78,15 +78,24 @@ class SnapshotStore(val root: String) {
         s""""fp":"${esc(fingerprint)}","wall_ms":$wallMs,""" +
         s""""rows":${counts.map(_._2).sum},"partitions":[""" +
         counts.map { case (p, c) => s"""{"pid":$p,"rows":$c}""" }.mkString(",") + "]}"
-    val existing = readManifest().filterNot(_.contains(s""""stage":"${esc(stage)}","snapshot":$snapId"""))
-    val json = "[" + (existing :+ entry).mkString(",") + "]"
-    val tmp = Paths.get(root, s".manifest.tmp.$snapId")
-    Files.createDirectories(Paths.get(root))
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    updateManifest(
+      _.filterNot(_.contains(s""""stage":"${esc(stage)}","snapshot":$snapId""")) :+ entry)
     snapId
   }
+
+  /** Read-modify-write of the manifest, swapped in atomically. Stages
+    * run concurrently (the stage graph's parallel chains), so the
+    * update holds one JVM-wide lock — only the update: the parquet
+    * writes before it stay parallel. */
+  private def updateManifest(f: Vector[String] => Vector[String]): Unit =
+    SnapshotStore.synchronized {
+      Files.createDirectories(Paths.get(root))
+      val tmp = Paths.get(root, s".manifest.tmp.${java.util.UUID.randomUUID()}")
+      Files.write(tmp, ("[" + f(readManifest()).mkString(",") + "]")
+        .getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    }
 
   private def readManifest(): Vector[String] = {
     if (!Files.exists(manifestPath)) Vector.empty
@@ -252,13 +261,12 @@ class SnapshotStore(val root: String) {
     }
     if (stale.nonEmpty) {
       val keys = stale.map(id => s""""stage":"${esc(stage)}","snapshot":$id""").toSet
-      val keep = readManifest().filterNot(e => keys.exists(e.contains))
-      val json = "[" + keep.mkString(",") + "]"
-      val tmp = Paths.get(root, s".manifest.tmp.expire.${System.nanoTime()}")
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      updateManifest(_.filterNot(e => keys.exists(e.contains)))
     }
     stale.size
   }
 }
+
+/** The lock every store's manifest update takes: stores opened on the
+  * same root within one JVM must not lose each other's entries either. */
+object SnapshotStore

@@ -23,8 +23,9 @@ import graft.snapshot.SnapshotStore
  *  3. rebuilds the cluster layer (surfaces → CC → memberships →
  *     prototypes → superedges → triples → event/relation/
  *     justification outputs) over the ACCUMULATED compact KE rows via
- *     the SAME [[Main.kgStages]] the batch CLI runs, snapshotting
- *     every stage with a fingerprint keyed to the log head.
+ *     the SAME stage graph the batch CLI and [[graft.Pipeline.run]]
+ *     run ([[Main.kgStages]]), snapshotting every stage with a
+ *     fingerprint keyed to the log head.
  *
  * Clustering is a global fixpoint (a new mention can merge two old
  * clusters), so the cluster layer recomputes over the accumulated KE

@@ -596,7 +596,8 @@ class OpsSpec extends AnyFunSuite {
       (9002L, "le der"),              // needles need both pads; still 0 → en
       (9003L, " la et the and "),     // en vs fr tie (2 each) → max lang: fr
       (9004L, "und und und der die"), // de
-      (9005L, "the the the the the the"))) // overlap-free repeat counting
+      (9005L, "the the the the the the"), // overlap-free repeat counting
+      (9006L, null)))                 // no text → no language (NULL)
       .toDF("doc_id", "text")
     for (d <- Seq(real, edge)) {
       val kernel = graft.ops.TextStats.langId(d)
@@ -605,6 +606,7 @@ class OpsSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(kernel == columnar)
     }
+    assert(graft.ops.TextStats.langId(edge.filter("text is null")).head().isNullAt(1))
   }
 
   test("langid picks the stopword-dominant language") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.synth.TranscriptSynth
@@ -56,5 +57,19 @@ class PropertySpec extends AnyFunSuite {
     // every cluster has exactly one prototype row
     assert(r.prototypes.select("cluster_id").distinct().count() ==
       r.prototypes.count())
+  }
+
+  test("prototype id and kind are constant within a cluster") {
+    // Canonicalizer.prototypes carries both as max() aggregates instead
+    // of grouping keys — exact only while every dictionary row of a
+    // cluster agrees on them
+    val r = Pipeline.run(TranscriptSynth.turnsDs(spark, cfg, partitions = 6))
+    val perCluster = r.surfaceClusters.groupBy(col("cluster_id"))
+      .agg(countDistinct(col("prototype_id")).as("ids"), countDistinct(col("kind")).as("kinds"))
+    assert(perCluster.filter(col("ids") =!= 1 || col("kinds") =!= 1).isEmpty)
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("cluster_id", "prototype_id", "kind").distinct().collect().toSet
+    assert(triples(r.prototypes.toDF()) == triples(r.surfaceClusters))
+    r.unpersist()
   }
 }

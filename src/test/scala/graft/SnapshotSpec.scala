@@ -105,4 +105,19 @@ class SnapshotSpec extends AnyFunSuite {
     assert(store.expire("s") == 0)
     assert(store.stages().toSet == Set("s", "keepme"))
   }
+
+  test("concurrent writes of distinct stages keep every manifest entry") {
+    import spark.implicits._
+    val store = new SnapshotStore(Files.createTempDirectory("snap").toString)
+    // the stage graph's parallel chains write distinct stages at once:
+    // each write's manifest update must see every other's
+    val stages = (0 until 24).map(i => s"stage_$i")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try stages.map(s => pool.submit(() => store.write(s, (1 to 10).toDF("v"), s)))
+      .foreach(_.get())
+    finally pool.shutdown()
+    assert(store.stages().toSet == stages.toSet)
+    stages.foreach(s => assert(store.currentFingerprint(s).contains(s)))
+    assert(store.manifestEntries().size == stages.size)
+  }
 }
