@@ -114,8 +114,8 @@ object Bench {
       // slower on low-core runs (the scaling-ladder rows)
       val n = 62_500_000L * cpus
       val t0 = System.nanoTime()
-      // IDENTICAL kernel to graft.CpuProbe — the committed constant
-      // was measured with this exact expression
+      // the committed constant was measured with this exact
+      // expression: change the kernel and the constant is void
       spark.range(0, n, 1, cpus * 2)
         .select(sum(bit_count(xxhash64(col("id"), xxhash64(col("id"), col("id"))))))
         .head()
@@ -199,7 +199,7 @@ object Bench {
     //      zero added throughput (the same binary measured 16s and
     //      176s minutes apart). Invisible to the steal gate, so every
     //      run is preceded by a ~2s CANARY: the allocation-free codegen
-    //      kernel rate (same kernel as graft.CpuProbe), compared to the
+    //      kernel rate (the `canary` kernel above), compared to the
     //      committed quiet-window constant. A capped window suppresses
     //      the canary the same way it suppresses the pipeline.
     // Protocol: min-of-2 always; keep re-running (bounded) until one

@@ -29,8 +29,27 @@ import graft.synth.TranscriptSynth
  */
 object Main {
 
+  val Usage: String = "usage: graft.Main --input <parquet dir | synth:<nTurns>> " +
+    "--output <snapshot root> [--threshold 0.65] [--dedup <jaccard>] " +
+    "[--strip-boilerplate <minConvs>]"
+
+  private val Flags = Set("--input", "--output", "--threshold", "--dedup", "--strip-boilerplate")
+
+  /** `--flag value` pairs, keyed without the dashes. An unknown flag or
+    * a flag without a value is an IllegalArgumentException carrying
+    * [[Usage]], never silently dropped. */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
+    args.grouped(2).map {
+      case Array(k, v) if Flags(k) && !v.startsWith("--") => k.stripPrefix("--") -> v
+      case a => throw new IllegalArgumentException(
+        (if (Flags(a(0))) s"${a(0)} needs a value" else s"unknown flag ${a(0)}") + "\n" + Usage)
+    }.toMap
+
+  /** The fingerprint prefix every snapshot stage is keyed under: the
+    * input identity plus the linker config. */
+  private[graft] def baseFingerprint(inputId: String, linkCfg: Linker.Config): String =
+    s"input=$inputId|threshold=${linkCfg.threshold}" +
+      s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}"
 
   def loadTurns(spark: SparkSession, input: String): Dataset[Turn] = {
     import spark.implicits._
@@ -95,8 +114,7 @@ object Main {
       store: SnapshotStore, linkCfg: Linker.Config = Linker.Config(),
       inputId: String = "", dedupJaccard: Option[Double] = None,
       stripBoilerplateMinConvs: Option[Long] = None): Long = {
-    val fp = s"input=$inputId|threshold=${linkCfg.threshold}" +
-      s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}" +
+    val fp = baseFingerprint(inputId, linkCfg) +
       s"|dedup=${dedupJaccard.getOrElse("off")}" +
       s"|strip=${stripBoilerplateMinConvs.getOrElse("off")}"
 
@@ -140,7 +158,7 @@ object Main {
     * incremental path (ke = the union of the append-log's delta
     * snapshots; the caller keys `fp` to the log head so advancing the
     * log recomputes and an idempotent re-fire resumes). Returns the
-    * triple count. */
+    * triple count the manifest recorded for the `triples` snapshot. */
   private[graft] def kgStages(spark: SparkSession, ke: DataFrame, store: SnapshotStore,
       fp: String, linkCfg: Linker.Config,
       saltedMembershipRows: Long = Pipeline.SaltedMembershipRows): Long = {
@@ -148,7 +166,7 @@ object Main {
       saltedMembershipRows)
     outputStages(r).foreach { case (stage, df) => store.getOrCreate(spark, stage, fp)(df) }
     r.unpersist()
-    store.read(spark, "triples").get.count()
+    store.currentRows("triples").get
   }
 
   /** The graph's lazy outputs under their snapshot stage names, in the
@@ -169,7 +187,9 @@ object Main {
     "superedge_justifications" -> r.superEdgeJustifications)
 
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
+    val opts = try parseArgs(args) catch {
+      case e: IllegalArgumentException => System.err.println(e.getMessage); sys.exit(2)
+    }
     val input = opts.getOrElse("input", "synth:100000")
     val output = opts.getOrElse("output", "/tmp/graft-kg")
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -113,9 +113,6 @@ object Pipeline {
     * guide §3.1). */
   val BroadcastableAggRows: Long = 250000L
 
-  private def timedStage[T](name: String)(f: => T): T =
-    graft.util.StageTiming.timed(name)(f)
-
   /** The stage graph's materialization boundary. [[stages]] is written
     * once against it; the two implementations decide only where a
     * boundary lands — in-session blocks ([[InSession]]) or snapshots
@@ -139,7 +136,7 @@ object Pipeline {
     * §4.3.5). */
   object InSession extends Materializer {
     def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
-      timedStage(name) { if (materialized) build else build.localCheckpoint(true) }
+      if (materialized) build else build.localCheckpoint(true)
     def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
   }
 
@@ -184,15 +181,14 @@ object Pipeline {
     // 2M turns. The five carves are INDEPENDENT full scans of the same
     // blocks — submitted concurrently so they overlap (guide §2.6):
     // wall ≈ the slowest scan, not the sum of five.
-    val (mentions, statements, errors, events, eventArgs) =
-      timedStage("carve_all") {
-        def carve(tag: Int, cols: String) =
-          Future(m.cut(ke.filter(col("tag") === tag).select(col(cols))))
-        val (fM, fS, fErr, fEv, fA) =
-          (carve(1, "m.*"), carve(2, "s.*"), carve(3, "error"), carve(4, "m.*"), carve(5, "a.*"))
-        (await(fM).as[Mention], await(fS).as[Statement], await(fErr),
-          await(fEv).as[Mention], await(fA))
-      }
+    val (mentions, statements, errors, events, eventArgs) = {
+      def carve(tag: Int, cols: String) =
+        Future(m.cut(ke.filter(col("tag") === tag).select(col(cols))))
+      val (fM, fS, fErr, fEv, fA) =
+        (carve(1, "m.*"), carve(2, "s.*"), carve(3, "error"), carve(4, "m.*"), carve(5, "a.*"))
+      (await(fM).as[Mention], await(fS).as[Statement], await(fErr),
+        await(fEv).as[Mention], await(fA))
+    }
     // the wide union is dead once carved; a snapshot scan pins nothing
     graft.util.Blocks.release(ke)
 
@@ -212,7 +208,7 @@ object Pipeline {
     // broadcasts (Catalyst picks BroadcastHashJoin from the compact
     // materialized stats); above it the explicit salted join defuses
     // the hot-surface key before the sort-merge shuffle.
-    val nSurfaces = timedStage("nSurfaces_count") { surfClusters.count() }
+    val nSurfaces = surfClusters.count()
     val dictFits = nSurfaces <= saltedMembershipRows
     // prototype/cluster cardinality ≤ nSurfaces — a MEASURED gate for
     // broadcasting the compact prototype side into its two join-backs
@@ -227,40 +223,37 @@ object Pipeline {
     // past the broadcast limit where un-hinted Catalyst falls back to
     // a shuffle join (which AQE then skew-splits; the downstream
     // groupBy's partial agg absorbs the hot surface either way).
-    val (memberships, resolvedStmts, superEdges, superEdgesFit, prototypes) =
-      timedStage("memberships_to_superedges_and_prototypes") {
-        val fMem = Future(m.stage("memberships") {
-          (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)
-           else Canonicalizer.membershipsSalted(mentions, surfClusters)).toDF()
-        }.as[Membership])
-        // ONE statements⋈memberships² resolution, shared by THREE
-        // consumers (superedges here; relation clusters and superedge
-        // justifications below). Before round 6 each consumer
-        // re-executed the two corpus-scale merge joins — 4 extra
-        // mention-scale shuffles per full-output run (guide §2.4; A/B
-        // in OPTIMIZATION_r06.md). Under dictFits the two membership
-        // sort-merges collapse to broadcast dictionary joins (Statement
-        // carries both arg surface keys from extraction — guide §8) and
-        // the chain does not wait on memberships at all.
-        val fChain = Future {
-          val resolved = timedStage("resolved_statements") {
-            m.cut(if (dictFits)
-                SuperEdges.resolvedStatementsViaDict(statements, surfClusters)
-              else SuperEdges.resolvedStatements(statements, await(fMem))) }
-          val se = m.stage("superedges") {
-            SuperEdges.superEdgesFromResolved(resolved).toDF() }.as[SuperEdge]
-          // measured (not estimated) relation-cluster count for the
-          // count-join strategy below — a cheap scan of the stage
-          val fit = timedStage("superEdges_count") {
-            se.count() } <= BroadcastableAggRows
-          (resolved, se, fit)
-        }
-        val fProto = Future(m.stage("prototypes") {
-          Canonicalizer.prototypes(mentions, surfClusters, broadcastDict = dictFits).toDF()
-        }.as[Prototype])
-        val (resolved, se, fit) = await(fChain)
-        (await(fMem), resolved, se, fit, await(fProto))
+    val (memberships, resolvedStmts, superEdges, superEdgesFit, prototypes) = {
+      val fMem = Future(m.stage("memberships") {
+        (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)
+         else Canonicalizer.membershipsSalted(mentions, surfClusters)).toDF()
+      }.as[Membership])
+      // ONE statements⋈memberships² resolution, shared by THREE
+      // consumers (superedges here; relation clusters and superedge
+      // justifications below). Before round 6 each consumer
+      // re-executed the two corpus-scale merge joins — 4 extra
+      // mention-scale shuffles per full-output run (guide §2.4; A/B
+      // in OPTIMIZATION_r06.md). Under dictFits the two membership
+      // sort-merges collapse to broadcast dictionary joins (Statement
+      // carries both arg surface keys from extraction — guide §8) and
+      // the chain does not wait on memberships at all.
+      val fChain = Future {
+        val resolved = m.cut(if (dictFits)
+            SuperEdges.resolvedStatementsViaDict(statements, surfClusters)
+          else SuperEdges.resolvedStatements(statements, await(fMem)))
+        val se = m.stage("superedges") {
+          SuperEdges.superEdgesFromResolved(resolved).toDF() }.as[SuperEdge]
+        // measured (not estimated) relation-cluster count for the
+        // count-join strategy below — a cheap scan of the stage
+        val fit = se.count() <= BroadcastableAggRows
+        (resolved, se, fit)
       }
+      val fProto = Future(m.stage("prototypes") {
+        Canonicalizer.prototypes(mentions, surfClusters, broadcastDict = dictFits).toDF()
+      }.as[Prototype])
+      val (resolved, se, fit) = await(fChain)
+      (await(fMem), resolved, se, fit, await(fProto))
+    }
     val triples = SuperEdges.namedTriples(superEdges, prototypes,
       broadcastNames = protosFit)
 

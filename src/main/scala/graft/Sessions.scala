@@ -20,11 +20,7 @@ object Sessions {
       // native scalar kernels (minhash/simhash/cosine/lsh) — see
       // graft.functions.GraftExtensions
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // AQE default on (skew-join splitting, coalescing); SPARK_GRAFT_AQE=false
-      // disables it for overhead A/B — each AQE stage re-optimizes on the
-      // driver, which dominates when a pipeline has many tiny shuffles
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // small parquet files must not collapse to 1-task scans: cap the

@@ -186,8 +186,7 @@ object Linker {
     // localCheckpoint (not persist) both reuses the data AND truncates
     // the plan, so downstream actions don't re-optimize the whole
     // extraction+id-assignment tree each time.
-    val surf = graft.util.StageTiming.timed("linker_surfaces") {
-      surfaces(mentions).localCheckpoint(true) }
+    val surf = surfaces(mentions).localCheckpoint(true)
     (surf, matchEdgesFrom(surf, cfg))
   }
 
@@ -198,14 +197,12 @@ object Linker {
     val spark = surf.sparkSession
     import spark.implicits._
     // one job: IDF corpus size + the xxhash64 sid collision guard
-    val sizes = graft.util.StageTiming.timed("linker_sizes") {
-      surf.agg(count(lit(1)), countDistinct($"sid")).head() }
+    val sizes = surf.agg(count(lit(1)), countDistinct($"sid")).head()
     val (nSurf, nSid) = (sizes.getLong(0), sizes.getLong(1))
     require(nSurf == nSid,
       s"surface id hash collision: $nSurf surfaces, $nSid distinct sids")
     val jm = JoinMode(nSurf <= cfg.broadcastableSurfaces)
-    val toks = graft.util.StageTiming.timed("linker_toks") {
-      tokenVectors(surf, cfg, nSurf).localCheckpoint(true) }
+    val toks = tokenVectors(surf, cfg, nSurf).localCheckpoint(true)
     val pairs = candidatePairs(surf, toks, cfg, jm)
     // suffix veto: "acme corp" vs "acme group" share a rare stem but
     // denote different organizations — when both names end in a known
@@ -238,7 +235,7 @@ object Linker {
         .select(least($"sid", $"rep").as("sid1"),
           greatest($"sid", $"rep").as("sid2"))
     }
-    val edges = graft.util.StageTiming.timed("linker_edges") { scored.filter($"score" >= cfg.threshold)
+    val edges = scored.filter($"score" >= cfg.threshold)
       .select($"sid1", $"sid2")
       .unionByName(linkPairs)
       .unionByName(abbrevPairs(surf, jm))
@@ -250,7 +247,7 @@ object Linker {
       // released HERE instead of pinning TF-IDF vectors for the rest of
       // the session (every caller forces the edge list immediately:
       // connected components' first round, or the snapshot write)
-      .localCheckpoint(true) }
+      .localCheckpoint(true)
     graft.util.Blocks.release(toks)
     edges
   }

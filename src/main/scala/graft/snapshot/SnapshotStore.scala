@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,16 +29,15 @@ import org.apache.spark.sql.functions._
  *
  * Layout: <root>/<stage>/snap-<id>/  (parquet)
  *         <root>/manifest.json       (atomic swap via tmp + move)
+ *
+ * The manifest is a compact JSON list of flat entries, keys in this
+ * order: `{"stage","snapshot","parent","fp","wall_ms","rows",
+ * "partitions":[{"pid","rows"},…]}`. External readers match entries by
+ * that layout, so it is part of the format.
  */
 class SnapshotStore(val root: String) {
 
   private def manifestPath = Paths.get(root, "manifest.json")
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
 
   /** Write `df` as the next snapshot of `stage`; returns snapshot id.
     * SINGLE-PASS: the stage computes exactly once — the write carries
@@ -53,7 +54,8 @@ class SnapshotStore(val root: String) {
     // monotonic per stage: two writes within one millisecond (e.g. a
     // fingerprint-invalidated recompute of a tiny stage) must not
     // collide on directory + manifest key
-    val snapId = math.max(current(stage).map(_ + 1L).getOrElse(0L),
+    val parent = current(stage)
+    val snapId = math.max(parent.map(_ + 1L).getOrElse(0L),
       System.currentTimeMillis())
     val dir = s"$root/$stage/snap-$snapId"
     // wall_ms covers forcing the stage's computation: the parquet write
@@ -72,14 +74,13 @@ class SnapshotStore(val root: String) {
     val counts = df.sparkSession.read.parquet(dir)
       .groupBy(col("_pid")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val parent = current(stage).map(_.toString).getOrElse("null")
-    val entry =
-      s"""{"stage":"${esc(stage)}","snapshot":$snapId,"parent":$parent,""" +
-        s""""fp":"${esc(fingerprint)}","wall_ms":$wallMs,""" +
-        s""""rows":${counts.map(_._2).sum},"partitions":[""" +
-        counts.map { case (p, c) => s"""{"pid":$p,"rows":$c}""" }.mkString(",") + "]}"
-    updateManifest(
-      _.filterNot(_.contains(s""""stage":"${esc(stage)}","snapshot":$snapId""")) :+ entry)
+    val entry = SnapshotStore.json.createObjectNode()
+      .put("stage", stage).put("snapshot", snapId)
+    parent.fold(entry.putNull("parent"))(entry.put("parent", _))
+    entry.put("fp", fingerprint).put("wall_ms", wallMs).put("rows", counts.map(_._2).sum)
+    val parts = entry.putArray("partitions")
+    counts.foreach { case (p, c) => parts.addObject().put("pid", p).put("rows", c) }
+    updateManifest(_.filterNot(e => stageOf(e) == stage && idOf(e) == snapId) :+ entry)
     snapId
   }
 
@@ -87,73 +88,40 @@ class SnapshotStore(val root: String) {
     * run concurrently (the stage graph's parallel chains), so the
     * update holds one JVM-wide lock — only the update: the parquet
     * writes before it stay parallel. */
-  private def updateManifest(f: Vector[String] => Vector[String]): Unit =
+  private def updateManifest(f: Vector[ObjectNode] => Vector[ObjectNode]): Unit =
     SnapshotStore.synchronized {
       Files.createDirectories(Paths.get(root))
       val tmp = Paths.get(root, s".manifest.tmp.${java.util.UUID.randomUUID()}")
-      Files.write(tmp, ("[" + f(readManifest()).mkString(",") + "]")
-        .getBytes(StandardCharsets.UTF_8))
+      val list = SnapshotStore.json.createArrayNode()
+      f(readManifest()).foreach(list.add)
+      Files.write(tmp, SnapshotStore.json.writeValueAsBytes(list))
       Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     }
 
-  private def readManifest(): Vector[String] = {
+  private def readManifest(): Vector[ObjectNode] =
     if (!Files.exists(manifestPath)) Vector.empty
-    else {
-      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8).trim
-        .stripPrefix("[").stripSuffix("]")
-      // entries are flat objects with a nested array — split on "},{" at depth 1
-      if (s.isEmpty) Vector.empty
-      else {
-        val out = Vector.newBuilder[String]
-        var depth = 0; var start = 0
-        for (i <- s.indices) s.charAt(i) match {
-          case '{' | '[' => depth += 1
-          case '}' | ']' =>
-            depth -= 1
-            if (depth == 0) { out += s.substring(start, i + 1); start = i + 1 }
-          case ',' if depth == 0 => start = i + 1
-          case _ =>
-        }
-        out.result().map(_.trim).filter(_.nonEmpty)
-      }
-    }
-  }
+    else SnapshotStore.json.readTree(manifestPath.toFile).elements().asScala
+      .map(_.asInstanceOf[ObjectNode]).toVector
+
+  private def stageOf(e: ObjectNode): String = e.get("stage").asText
+  private def idOf(e: ObjectNode): Long = e.get("snapshot").asLong
+
+  /** The manifest entry of a stage's latest snapshot. */
+  private def latest(stage: String): Option[ObjectNode] =
+    readManifest().filter(stageOf(_) == stage).maxByOption(idOf)
 
   /** Latest snapshot id of a stage, if any. */
-  def current(stage: String): Option[Long] = {
-    val pat = s""""stage":"${esc(stage)}","snapshot":""".r
-    readManifest()
-      .filter(_.contains(s""""stage":"${esc(stage)}""""))
-      .flatMap { e =>
-        val k = e.indexOf("\"snapshot\":")
-        if (k < 0) None
-        else Some(e.substring(k + 11).takeWhile(_.isDigit).toLong)
-      }
-      .sorted.lastOption
-  }
+  def current(stage: String): Option[Long] = latest(stage).map(idOf)
 
   /** Fingerprint the latest snapshot of a stage was written under
     * (pre-fingerprint manifests report ""). */
   def currentFingerprint(stage: String): Option[String] =
-    current(stage).flatMap { id =>
-      readManifest()
-        .find(e => e.contains(s""""stage":"${esc(stage)}","snapshot":$id"""))
-        .map { e =>
-          val k = e.indexOf("\"fp\":\"")
-          if (k < 0) ""
-          else {
-            val start = k + 6
-            val sb = new StringBuilder
-            var i = start
-            while (i < e.length && e.charAt(i) != '"') {
-              if (e.charAt(i) == '\\' && i + 1 < e.length) { sb += e.charAt(i + 1); i += 2 }
-              else { sb += e.charAt(i); i += 1 }
-            }
-            sb.toString
-          }
-        }
-    }
+    latest(stage).map(_.path("fp").asText(""))
+
+  /** Row count recorded for the latest snapshot of a stage. */
+  def currentRows(stage: String): Option[Long] =
+    latest(stage).map(_.get("rows").asLong)
 
   /** Read a stage's snapshot (latest by default; pass an id for
     * time-travel). Returns None if the stage was never materialized —
@@ -196,14 +164,7 @@ class SnapshotStore(val root: String) {
 
   /** Every snapshot id of a stage, ascending (manifest lineage). */
   def snapshots(stage: String): Seq[Long] =
-    readManifest()
-      .filter(_.contains(s""""stage":"${esc(stage)}""""))
-      .flatMap { e =>
-        val k = e.indexOf("\"snapshot\":")
-        if (k < 0) None
-        else Some(e.substring(k + 11).takeWhile(_.isDigit).toLong)
-      }
-      .sorted
+    readManifest().filter(stageOf(_) == stage).map(idOf).sorted
 
   /** Iceberg-APPEND semantics: the new snapshot dir holds ONLY `df`
     * (the delta), the manifest entry chains to the parent as usual,
@@ -226,15 +187,11 @@ class SnapshotStore(val root: String) {
   }
 
   /** All manifest entries (raw JSON) — metrics/lineage introspection. */
-  def manifestEntries(): Seq[String] = readManifest()
+  def manifestEntries(): Seq[String] =
+    readManifest().map(SnapshotStore.json.writeValueAsString)
 
   /** Distinct stage names present in the manifest. */
-  def stages(): Seq[String] =
-    readManifest().flatMap { e =>
-      val k = e.indexOf("\"stage\":\"")
-      if (k < 0) None
-      else Some(e.substring(k + 9).takeWhile(_ != '"'))
-    }.distinct
+  def stages(): Seq[String] = readManifest().map(stageOf).distinct
 
   /** Iceberg `expire_snapshots` semantics for a REPLACE-mode stage:
     * delete every snapshot dir except the current one and drop the
@@ -260,8 +217,8 @@ class SnapshotStore(val root: String) {
       }
     }
     if (stale.nonEmpty) {
-      val keys = stale.map(id => s""""stage":"${esc(stage)}","snapshot":$id""").toSet
-      updateManifest(_.filterNot(e => keys.exists(e.contains)))
+      val keys = stale.toSet
+      updateManifest(_.filterNot(e => stageOf(e) == stage && keys(idOf(e))))
     }
     stale.size
   }
@@ -269,4 +226,7 @@ class SnapshotStore(val root: String) {
 
 /** The lock every store's manifest update takes: stores opened on the
   * same root within one JVM must not lose each other's entries either. */
-object SnapshotStore
+object SnapshotStore {
+  /** Reads and writes the manifest. */
+  private val json = new ObjectMapper()
+}

@@ -55,8 +55,7 @@ object IncrementalKg {
   def maintain(turns: Dataset[Turn], store: SnapshotStore,
       linkCfg: Linker.Config = Linker.Config(),
       inputId: String = "stream"): DataStreamWriter[Turn] = {
-    val baseFp = s"input=$inputId|threshold=${linkCfg.threshold}" +
-      s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}"
+    val baseFp = Main.baseFingerprint(inputId, linkCfg)
     turns.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>

@@ -83,6 +83,26 @@ class SnapshotSpec extends AnyFunSuite {
     assert(store.currentFingerprint("y").contains("threshold=0.80"))
   }
 
+  test("a fingerprint with quotes, backslashes and control characters resumes") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("snap").toString
+    val store = new SnapshotStore(root)
+    val fp = "input=a\"b\\c\nd\te\u0001f|threshold=0.65"
+    var computes = 0
+    def compute() = { computes += 1; (1 to 5).toDF("v") }
+    store.getOrCreate(spark, "z", fp)(compute())
+    store.getOrCreate(spark, "z", fp)(compute())
+    assert(computes == 1)
+    assert(store.currentFingerprint("z").contains(fp))
+    // the written entry keeps the compact, fixed-key-order layout
+    // external readers match
+    val manifest = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(root, "manifest.json")), "UTF-8")
+    assert(("""^\[\{"stage":"z","snapshot":\d+,"parent":null,"fp":"(?:[^"\\]|\\.)*",""" +
+      """"wall_ms":\d+,"rows":5,"partitions":\[(\{"pid":\d+,"rows":\d+\},?)+\]\}\]$""")
+      .r.findFirstIn(manifest).isDefined, manifest)
+  }
+
   test("expire keeps only the current snapshot of a replace-mode stage") {
     import spark.implicits._
     val root = Files.createTempDirectory("snap").toString
