@@ -153,18 +153,30 @@ object Main {
   /** Every stage DOWNSTREAM of extraction: the stage graph
     * [[Pipeline.run]] runs ([[Pipeline.stages]]) with its named stages
     * materialized as snapshots, then `triples` and the ten lazy outputs
-    * each snapshotted under its stage name. Shared by the batch resume
-    * path (ke = one snapshot of the whole corpus) and the streaming
-    * incremental path (ke = the union of the append-log's delta
-    * snapshots; the caller keys `fp` to the log head so advancing the
-    * log recomputes and an idempotent re-fire resumes). Returns the
-    * triple count the manifest recorded for the `triples` snapshot. */
+    * each snapshotted under its stage name. The eleven outputs are
+    * independent plans over the stage snapshots, so they are written
+    * CONCURRENTLY (their manifest updates serialize on the store's
+    * lock); for them the manifest's entry order is their completion
+    * order, so readers key entries by stage name. Their plans pin no
+    * checkpoint (every input is a snapshot scan or a lazy cut), so one
+    * output's post-write release frees nothing another still reads.
+    * Shared by the batch resume path (ke = one snapshot of the whole
+    * corpus) and the streaming incremental path (ke = the union of the
+    * append-log's delta snapshots; the caller keys `fp` to the log
+    * head so advancing the log recomputes and an idempotent re-fire
+    * resumes). Returns the triple count the manifest recorded for the
+    * `triples` snapshot. */
   private[graft] def kgStages(spark: SparkSession, ke: DataFrame, store: SnapshotStore,
       fp: String, linkCfg: Linker.Config,
       saltedMembershipRows: Long = Pipeline.SaltedMembershipRows): Long = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     val r = Pipeline.stages(ke, new Pipeline.Snapshots(spark, store, fp), linkCfg,
       saltedMembershipRows)
-    outputStages(r).foreach { case (stage, df) => store.getOrCreate(spark, stage, fp)(df) }
+    val writes = outputStages(r).map { case (stage, df) =>
+      Future(store.getOrCreate(spark, stage, fp)(df)) }
+    Await.result(Future.sequence(writes), Duration.Inf)
     r.unpersist()
     store.currentRows("triples").get
   }
@@ -199,6 +211,8 @@ object Main {
       if (sys.props.contains("spark.master"))
         SparkSession.builder()
           .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+          // JVM case mappings, as Sessions.local sets them
+          .config("spark.sql.icu.caseMappings.enabled", "false")
           .getOrCreate()
       else Sessions.local(cores)
     val store = new SnapshotStore(output)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -124,6 +124,10 @@ object Pipeline {
     /** An in-session-only cut: the extraction carves and the shared
       * resolved-statement frame. */
     def cut(df: DataFrame): DataFrame
+    /** Row count of a stage [[stage]] already returned, as recorded
+      * when it was materialized — the measured-count gates' input,
+      * without a count job. */
+    def rows(name: String): Long
   }
 
   /** Eager localCheckpoint at every boundary, [[run]]'s materializer.
@@ -133,11 +137,23 @@ object Pipeline {
     * nested encode/decode dominating, not data work). This is the
     * in-session analog of the snapshot-per-stage design the
     * reference's step-resumable pipeline implies (SURVEY.md §3.1,
-    * §4.3.5). */
-  object InSession extends Materializer {
+    * §4.3.5). A stage's row count rides its checkpoint job as an
+    * [[Observation]], so only the stages it checkpoints itself (not
+    * `materialized` ones) have [[rows]]; one instance per run, as it
+    * keeps those counts. */
+  final class InSession extends Materializer {
+    private val counts = new java.util.concurrent.ConcurrentHashMap[String, Observation]()
     def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
-      if (materialized) build else build.localCheckpoint(true)
+      if (materialized) build
+      else {
+        val obs = Observation()
+        counts.put(name, obs)
+        build.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+      }
     def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def rows(name: String): Long = Option(counts.get(name))
+      .getOrElse(throw new NoSuchElementException(s"no row count observed for stage $name"))
+      .get("rows").asInstanceOf[Long]
   }
 
   /** Every named stage resumes from, or is written as, a
@@ -145,18 +161,20 @@ object Pipeline {
     * plans over the snapshots: parquet scans already prune columns, and
     * a checkpointed cut shared by two stages would be freed under the
     * later one, because `getOrCreate` releases every checkpoint its
-    * builder pinned. */
+    * builder pinned. Row counts are the manifest's. */
   final class Snapshots(spark: SparkSession, store: SnapshotStore, fp: String)
       extends Materializer {
     def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
       store.getOrCreate(spark, name, fp)(build)
     def cut(df: DataFrame): DataFrame = df
+    def rows(name: String): Long = store.currentRows(name).get
   }
 
   def run(turns: Dataset[Turn], linkCfg: Linker.Config = Linker.Config(),
-      saltedMembershipRows: Long = SaltedMembershipRows): Result =
-    stages(InSession.stage("ke")(Main.extractKe(turns)), InSession, linkCfg,
-      saltedMembershipRows)
+      saltedMembershipRows: Long = SaltedMembershipRows): Result = {
+    val m = new InSession
+    stages(m.stage("ke")(Main.extractKe(turns)), m, linkCfg, saltedMembershipRows)
+  }
 
   /** The KG stage graph from the tagged KE frame (`ke`, already a stage
     * boundary) to every output, materialized through `m`. The named
@@ -208,7 +226,7 @@ object Pipeline {
     // broadcasts (Catalyst picks BroadcastHashJoin from the compact
     // materialized stats); above it the explicit salted join defuses
     // the hot-surface key before the sort-merge shuffle.
-    val nSurfaces = surfClusters.count()
+    val nSurfaces = m.rows("surface_clusters")
     val dictFits = nSurfaces <= saltedMembershipRows
     // prototype/cluster cardinality ≤ nSurfaces — a MEASURED gate for
     // broadcasting the compact prototype side into its two join-backs
@@ -244,8 +262,8 @@ object Pipeline {
         val se = m.stage("superedges") {
           SuperEdges.superEdgesFromResolved(resolved).toDF() }.as[SuperEdge]
         // measured (not estimated) relation-cluster count for the
-        // count-join strategy below — a cheap scan of the stage
-        val fit = se.count() <= BroadcastableAggRows
+        // count-join strategy below — recorded when the stage landed
+        val fit = m.rows("superedges") <= BroadcastableAggRows
         (resolved, se, fit)
       }
       val fProto = Future(m.stage("prototypes") {

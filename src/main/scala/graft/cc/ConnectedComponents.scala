@@ -46,8 +46,10 @@ object ConnectedComponents {
     // checkpointing makes each round's plan O(1) regardless of how
     // edges were produced
     val sym = symmetric(edges).localCheckpoint(true)
+    val vertices = Observation()
     var labels = sym.select(col("src").as("sid")).distinct()
       .withColumn("component", col("sid"))
+      .observe(vertices, count(lit(1)).as("n"))
       .localCheckpoint(true)
     // size-gated join strategy (round 6, guide §3.1): the label /
     // neighbor-min frames are O(vertices); when the graph is small the
@@ -56,9 +58,9 @@ object ConnectedComponents {
     // compile-time-broadcast hazard, graft.superedge.SuperEdges) and
     // each round stops paying two shuffle+sort pairs. A huge graph
     // (10^8 surfaces at contract scale) takes the identical
-    // pre-round-6 merge-hinted plan. The count is a cheap metadata-ish
-    // job over the just-checkpointed labels.
-    val small = labels.count() <= broadcastableVertices
+    // pre-round-6 merge-hinted plan. The vertex count rides the labels'
+    // checkpoint job (observe), like each round's `changed` below.
+    val small = vertices.get("n").asInstanceOf[Long] <= broadcastableVertices
     def bc(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df.hint("merge")
     var changed = 1L

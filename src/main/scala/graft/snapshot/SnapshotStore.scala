@@ -7,6 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,12 +44,14 @@ class SnapshotStore(val root: String) {
   private def manifestPath = Paths.get(root, "manifest.json")
 
   /** Write `df` as the next snapshot of `stage`; returns snapshot id.
-    * SINGLE-PASS: the stage computes exactly once — the write carries
-    * a `_pid` (spark_partition_id) lineage column into the parquet,
-    * and the per-partition row counters (the reference's
-    * progress-counter analog, update_kg/Updater.py:152) are then
-    * aggregated from the WRITTEN files, a column-pruned scan of one
-    * RLE int column, never a second computation of the stage.
+    * The parquet write is the ONLY Spark job: the stage computes
+    * exactly once, and the per-partition row counters (the reference's
+    * progress-counter analog, update_kg/Updater.py:152) come from the
+    * written files' parquet footers, read on the driver. A write task
+    * names its files `part-NNNNN-…` after its partition id, which is
+    * also the `_pid` (spark_partition_id) lineage column its rows
+    * carry into the parquet, so a file's footer row count is its
+    * partition's counter. Partitions that wrote no rows get no entry.
     * `fingerprint` records the config/input identity the snapshot was
     * built under; [[getOrCreate]] refuses to resume across a
     * fingerprint change. */
@@ -71,9 +77,8 @@ class SnapshotStore(val root: String) {
     df.withColumn("_pid", spark_partition_id())
       .write.mode("overwrite").parquet(dir)
     val wallMs = builderWallMs + (System.nanoTime() - t0) / 1000000L
-    val counts = df.sparkSession.read.parquet(dir)
-      .groupBy(col("_pid")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val counts = SnapshotStore.footerCounts(dir,
+      df.sparkSession.sparkContext.hadoopConfiguration)
     val entry = SnapshotStore.json.createObjectNode()
       .put("stage", stage).put("snapshot", snapId)
     parent.fold(entry.putNull("parent"))(entry.put("parent", _))
@@ -229,4 +234,24 @@ class SnapshotStore(val root: String) {
 object SnapshotStore {
   /** Reads and writes the manifest. */
   private val json = new ObjectMapper()
+
+  private val PartFile = """part-(\d+)-.*\.parquet""".r
+
+  /** Rows per write-task partition id of the parquet snapshot in
+    * `dir`, ascending by id, summed over each task's files and
+    * without the ids whose files hold no rows (a write of an empty
+    * frame leaves one schema-only file). */
+  private def footerCounts(dir: String, conf: Configuration): Seq[(Int, Long)] = {
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case PartFile(pid) =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          val rows = try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+            finally reader.close()
+          Some(pid.toInt -> rows)
+        case _ => None
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 0).sortBy(_._1)
+  }
 }

@@ -72,6 +72,13 @@ class MaterializerParitySpec extends AnyFunSuite {
       val fp = "salted"
       val ke = store.getOrCreate(spark, "ke", fp)(Main.extractKe(turns))
       Main.kgStages(spark, ke, store, fp, Linker.Config(), saltedMembershipRows = 0L)
+      // kgStages writes the outputs concurrently and releases each one's
+      // checkpoints after its write: the outputs (resumed here) must pin
+      // none, or one write could free blocks another still reads
+      val r = Pipeline.stages(ke, new Pipeline.Snapshots(spark, store, fp), Linker.Config(), 0L)
+      Main.outputStages(r).foreach { case (stage, df) =>
+        assert(graft.util.Blocks.pinned(df).isEmpty, stage) }
+      r.unpersist()
     }
   }
 }

@@ -1,13 +1,27 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.snapshot.SnapshotStore
 
 class SnapshotSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** The manifest's `rows` and `partitions` of a stage's latest entry. */
+  private def manifestCounts(store: SnapshotStore, stage: String): (Long, Seq[(Int, Long)]) = {
+    val e = store.manifestEntries().map(new ObjectMapper().readTree(_))
+      .filter(_.get("stage").asText == stage).maxBy(_.get("snapshot").asLong)
+    (e.get("rows").asLong, e.get("partitions").elements().asScala
+      .map(p => p.get("pid").asInt -> p.get("rows").asLong).toSeq)
+  }
 
   test("write/read round-trip with lineage counters") {
     import spark.implicits._
@@ -139,5 +153,53 @@ class SnapshotSpec extends AnyFunSuite {
     assert(store.stages().toSet == stages.toSet)
     stages.foreach(s => assert(store.currentFingerprint(s).contains(s)))
     assert(store.manifestEntries().size == stages.size)
+  }
+
+  test("footer-derived partition counters equal a _pid count of the written files") {
+    import spark.implicits._
+    val store = new SnapshotStore(Files.createTempDirectory("snap").toString)
+    Seq(
+      "four_partitions" -> (1 to 100).toDF("v").repartition(4),
+      // a shuffle aggregate whose partitions AQE coalesces at run time
+      "coalesced_aggregate" -> (1 to 1000).toDF("v").groupBy((col("v") % 7).as("k")).count(),
+      "empty" -> (1 to 10).toDF("v").filter(col("v") < 0)
+    ).foreach { case (stage, df) =>
+      val id = store.write(stage, df)
+      val written = spark.read.parquet(s"${store.root}/$stage/snap-$id")
+        .groupBy(col("_pid")).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
+      assert(manifestCounts(store, stage) == (written.map(_._2).sum -> written), stage)
+    }
+    // an empty frame still records rows 0 and no partitions
+    assert(manifestCounts(store, "empty") == (0L -> Seq.empty))
+  }
+
+  test("write runs no Spark job after its parquet write") {
+    val store = new SnapshotStore(Files.createTempDirectory("snap").toString)
+    val df = spark.range(0, 100, 1, 4).toDF("v") // no shuffle: the write is one job
+    val marker = "snapshot-spec-marker"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val markerEnded = new CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == marker)
+          markerJob = e.jobId
+        else jobs.add(e.stageInfos.map(_.name).mkString(" | "))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerEnded.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.write("w", df)
+      // listener events arrive in order: once the marker job's end is
+      // seen, every job the write started has been seen too
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markerEnded.await(60, TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.size == 1, jobs.asScala.mkString("\n"))
+    assert(manifestCounts(store, "w") == (100L -> (0 until 4).map(_ -> 25L)))
   }
 }

@@ -25,7 +25,8 @@ def latest_dir(root, stage):
 
 def report(root):
     entries = json.load(open(root + "/manifest.json"))
-    # latest snapshot per stage, in first-write (pipeline) order
+    # latest snapshot per stage, in first-write order: pipeline order,
+    # except the concurrently written outputs, in completion order
     latest, order = {}, []
     for e in entries:
         if e["stage"] not in latest:
