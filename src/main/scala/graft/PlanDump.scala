@@ -2,14 +2,20 @@ package graft
 
 import java.io.{File, PrintWriter}
 
+import scala.util.control.NonFatal
+
 import graft.synth.TranscriptSynth
 
 /**
- * Round-6 plan capture (guide §7.2): writes `.explain("formatted")`
- * of every declared query — and of the pipeline's output frames over
- * a small corpus — to one file per query under args(1). Dev tool for
- * the plans/r06/ before/after evidence; not part of the driver
- * contract.
+ * Plan capture: writes `.explain("formatted")` of every declared
+ * per-table query in [[SparkEntry.queries]] (all but the `q_kg_*`
+ * pipeline rows) — and of the pipeline's output frames over a small
+ * corpus (`pipeline`) — to one file per name under `outDir`. Dev tool
+ * for the `plans/` before/after evidence.
+ *
+ * An unknown name in the filter exits 2 before any plan is built; a
+ * plan that fails to build is reported and the run exits 1 once the
+ * remaining plans are written.
  *
  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [names...]
  */
@@ -20,6 +26,12 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val only: Set[String] = args.drop(3).toSet
+    val tableQueries = SparkEntry.queries.keys.filterNot(_.startsWith("q_kg_")).toSeq.sorted
+    val unknown = only -- tableQueries - "pipeline"
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown plan names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     new File(outDir).mkdirs()
     val spark = Sessions.local(8, "graft-plandump")
 
@@ -32,23 +44,10 @@ object PlanDump {
     }
 
     // the per-table declared queries (cheap to construct; explain only)
-    val tableQueries = Seq(
-      "q_count_by_type", "q_group_count", "q_argmax_per_group",
-      "q_mode_tiebreak", "q_superedge_conf", "q_avg_conf",
-      "q_count_distinct", "q_group_concat", "q_join_chain", "q_left_outer",
-      "q_anti_join", "q_union", "q_intersect", "q_except", "q_two_hop",
-      "q_distinct", "q_suffix", "q_prefix_bucket", "q_json_extract",
-      "q_coalesce_pref", "q_substr_window", "q_regex_clean", "q_topk",
-      "q_stable_turn_order", "q_dedup_exact", "q_token_count", "q_quality",
-      "q_fingerprint", "q_langid", "q_wav_decode", "q_minhash_sigs",
-      "q_simhash", "q_ngram_jaccard", "q_near_dup_groups",
-      "q_boilerplate_lines", "q_strip_boilerplate", "q_repetition_ngrams",
-      "q_pii_redact", "q_dedup_doc_lines", "q_ann_topk", "q_cosine_pairs",
-      "q_cosine_pairs_lsh", "q_relation_clusters", "q_connected_components",
-      "q_event_coref", "q_superedge_justif", "q_proto_justi", "q_inf_just")
-    for (name <- tableQueries if only.isEmpty || only(name))
-      try dump(name, SparkEntry.queries(name)(spark, sfDir))
-      catch { case e: Throwable => println(s"skip $name: ${e.getMessage}") }
+    val failed = tableQueries.filter(n => only.isEmpty || only(n)).filterNot { name =>
+      try { dump(name, SparkEntry.queries(name)(spark, sfDir)); true }
+      catch { case NonFatal(e) => System.err.println(s"failed $name: $e"); false }
+    }
 
     // pipeline output frames over a small corpus (Pipeline.run
     // materializes its stage checkpoints; the frames below are the
@@ -66,5 +65,9 @@ object PlanDump {
       r.unpersist()
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"${failed.size} plan(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

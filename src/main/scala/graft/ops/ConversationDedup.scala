@@ -87,11 +87,4 @@ object ConversationDedup {
         Seq("conv_id"), "left_semi")
       .as[Turn]
   }
-
-  /** One-call form: (surviving turns, verdict rows). */
-  def dedupConversations(turns: Dataset[Turn],
-      jaccardThreshold: Double = 0.9): (Dataset[Turn], DataFrame) = {
-    val clusters = conversationClusters(turns, jaccardThreshold)
-    (canonicalTurns(turns, clusters), clusters)
-  }
 }

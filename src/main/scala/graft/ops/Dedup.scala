@@ -44,18 +44,6 @@ object Dedup {
         i => norm.substr(i, lit(k))))
   }
 
-  /** Word shingles (default k=3) — ~25× fewer array elements per doc
-    * than char-5 shingles, the right fidelity/cost point for MinHash
-    * CANDIDATE generation at corpus scale (char shingles stay for the
-    * exact verification pass). */
-  def wordShingles(text: Column, k: Int = 3): Column = {
-    val toks = split(trim(regexp_replace(lower(text), "\\s+", " ")), " ")
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(size(toks) - lit(k - 1), lit(1))),
-        i => concat_ws(" ", slice(toks, i, lit(k)))))
-  }
-
   /** MinHash signatures: K permutations of word-k-shingle hashes via
     * the Carter-Wegman affine family h_i = h1 + i·h2 (2 xxh64 calls
     * per shingle for all K minima); signature[i] = min over shingles.

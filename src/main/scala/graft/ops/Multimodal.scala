@@ -1,45 +1,30 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
- * Multimodal-column plumbing: image/audio/video payloads as opaque
- * `binary` columns with typed metadata — the Spark-side analog of the
- * reference's five justification modalities (Text/Image/KeyFrameVideo/
- * ShotVideo/Audio with bounding boxes and timestamps,
+ * Media-column plumbing: payloads as opaque `binary` columns tagged
+ * with a modality — the Spark-side analog of the reference's
+ * justification modalities (Text/Image/KeyFrameVideo/ShotVideo/Audio
+ * with bounding boxes and timestamps,
  * /root/reference/update_kg/sparqls.py:115-164, turtle templates
  * update_kg/Updater.py:385-485).
  *
- * Image and PCM-audio payloads decode for REAL without any external
- * dependency, dispatched on magic bytes:
- *  - WAV/PCM, BMP, PNG: hand-rolled pure-JVM decoders (PNG's only
- *    compression is zlib DEFLATE — `java.util.zip.Inflater` ships
- *    with the JDK; full chunk walk + all five scanline filters);
- *  - JPEG / GIF / TIFF: the JDK's own `javax.imageio` readers
- *    (java.desktop ships them; verified headless in this container) —
- *    real Huffman+DCT JPEG decode, no added library.
- * Only genuinely codec-bound MEDIA formats (MP3/AAC audio, H.264
- * video) fall back to a clearly-marked deterministic STUB for the
- * SAMPLE decode — their header-level METADATA (duration, sample rate,
- * channels, seek points) is real via [[Containers]]'s MP3/ADTS/FLAC
- * frame walks. The Spark-side contract — schema, batch shape,
- * partition-parallel mapPartitions, failure capture — is identical
- * for all paths, so swapping the stub for a JNI/codec call changes
- * only `decodeKernel`.
+ * The one decoder is 16-bit PCM WAV (RIFF/WAVE magic), hand-rolled on
+ * the JVM with no external dependency; it backs the oracled
+ * `q_wav_decode` row through [[wavRoundTrip]]. Any other payload is a
+ * per-row failure captured by [[extractFeatures]] (`ok = false`), so
+ * the Spark-side contract — schema, partition-parallel mapPartitions,
+ * failure capture — stays what a real codec call would plug into.
  */
 object Multimodal {
 
-  /** Typed media row: payload + modality metadata (sparse by modality,
-    * like the reference's ij CSV — update_kg/Updater.py:360-487). */
+  /** Typed media row: an opaque payload tagged with its modality. */
   final case class MediaRow(
       media_id: String,
       modality: String, // image | audio | video
-      payload: Array[Byte],
-      width: Int, // image/video; 0 otherwise
-      height: Int,
-      duration_ms: Long, // audio/video; 0 otherwise
-      source_doc: String)
+      payload: Array[Byte])
 
   /** Extracted features: fixed-size embedding + decode status. */
   final case class MediaFeatures(
@@ -52,50 +37,6 @@ object Multimodal {
 
   val EmbeddingDim = 16
 
-  /** Decode/feature kernel. REAL decoders for WAV/PCM (RIFF magic),
-    * BMP ("BM" magic), and PNG (\x89PNG magic) — sample-derived
-    * acoustic / pixel-derived visual features; anything else falls to
-    * the deterministic STUB (codec-bound formats — JPEG/MP3/H.264 —
-    * need libraries this container doesn't ship; marked
-    * intentionally). Malformed payloads of a recognized format THROW,
-    * and [[extractFeatures]] captures the failure per row. */
-  private[ops] def decodeKernel(payload: Array[Byte]): Array[Float] =
-    if (payload.length >= 12 && payload(0) == 'R' && payload(1) == 'I' &&
-        payload(2) == 'F' && payload(3) == 'F' &&
-        payload(8) == 'W' && payload(9) == 'A' && payload(10) == 'V' &&
-        payload(11) == 'E') decodeWav(payload)
-    else if (payload.length >= 2 && payload(0) == 'B' && payload(1) == 'M')
-      decodeBmp(payload)
-    else if (payload.length >= 8 && (payload(0) & 0xff) == 0x89 &&
-        payload(1) == 'P' && payload(2) == 'N' && payload(3) == 'G' &&
-        (payload(4) & 0xff) == 0x0d && (payload(5) & 0xff) == 0x0a &&
-        (payload(6) & 0xff) == 0x1a && (payload(7) & 0xff) == 0x0a)
-      decodePng(payload)
-    else if (payload.length >= 3 && (payload(0) & 0xff) == 0xff &&
-        (payload(1) & 0xff) == 0xd8 && (payload(2) & 0xff) == 0xff)
-      decodeImageIo(payload) // JPEG (SOI + marker)
-    else if (payload.length >= 4 && payload(0) == 'G' && payload(1) == 'I' &&
-        payload(2) == 'F' && payload(3) == '8')
-      decodeImageIo(payload) // GIF87a/89a
-    else if (payload.length >= 4 &&
-        ((payload(0) == 'I' && payload(1) == 'I' && (payload(2) & 0xff) == 42 && payload(3) == 0) ||
-         (payload(0) == 'M' && payload(1) == 'M' && payload(2) == 0 && (payload(3) & 0xff) == 42)))
-      decodeImageIo(payload) // TIFF little/big-endian
-    else stubKernel(payload)
-
-  /** JDK `javax.imageio` decode for the codec formats the JDK itself
-    * ships readers for (JPEG/GIF/TIFF — verified headless here): the
-    * resulting pixels go through the SAME [[pixelFeatures]] as
-    * BMP/PNG, so features are format-independent (lossless formats
-    * bit-identically so; JPEG up to its own quantization loss). */
-  private[ops] def decodeImageIo(payload: Array[Byte]): Array[Float] = {
-    javax.imageio.ImageIO.setUseCache(false) // no temp-file cache in executors
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-    require(img != null, "undecodable image payload")
-    require(img.getWidth > 0 && img.getHeight > 0, "empty image")
-    pixelFeatures(img.getWidth, img.getHeight, (x, y) => img.getRGB(x, y) & 0xffffff)
-  }
-
   private def i32(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
       ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
@@ -105,8 +46,13 @@ object Multimodal {
   /** Real WAV/PCM decode: parses RIFF chunks, requires PCM (format 1)
     * 16-bit; features = [duration_s, RMS, zero-crossing rate, mean
     * |amp|, peak, sampleRate/48k, channels/2, 0] ++ 8-segment RMS
-    * envelope — all derived from the actual samples. */
+    * envelope — all derived from the actual samples. A payload without
+    * RIFF....WAVE magic THROWS, as does a malformed WAV, and
+    * [[extractFeatures]] captures the failure per row. */
   private[ops] def decodeWav(b: Array[Byte]): Array[Float] = {
+    require(b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
+      b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E',
+      "not a RIFF/WAVE payload")
     var o = 12
     var fmtOk = false; var channels = 0; var sampleRate = 0; var bits = 0
     var dataOff = -1; var dataLen = 0
@@ -163,185 +109,6 @@ object Multimodal {
     out
   }
 
-  /** Shared pixel-statistics features over a top-down (x, y) → packed
-    * 0xRRGGBB accessor — FORMAT-INDEPENDENT: identical pixels through
-    * BMP and PNG produce bit-identical feature vectors (test-pinned).
-    * Features = [width/1k, height/1k, meanR, meanG, meanB, mean luma,
-    * luma stddev, mean |horizontal luma diff|] ++ mean luma over a 2×4
-    * (rows×cols) grid. */
-  private def pixelFeatures(width: Int, height: Int,
-      rgb: (Int, Int) => Int): Array[Float] = {
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    var sl = 0.0; var sl2 = 0.0; var hdiff = 0.0; var hdiffN = 0L
-    val grid = new Array[Double](8); val gridN = new Array[Long](8)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      var prevL = 0.0
-      while (x < width) {
-        val p = rgb(x, y)
-        val rr = (p >> 16) & 0xff
-        val gg = (p >> 8) & 0xff
-        val bb = p & 0xff
-        val l = (0.299 * rr + 0.587 * gg + 0.114 * bb) / 255.0
-        sr += rr; sg += gg; sb += bb; sl += l; sl2 += l * l
-        if (x > 0) { hdiff += math.abs(l - prevL); hdiffN += 1 }
-        prevL = l
-        val cell = (y * 2 / height) * 4 + (x * 4 / width)
-        grid(cell) += l; gridN(cell) += 1
-        x += 1
-      }
-      y += 1
-    }
-    val np = width.toLong * height
-    val out = new Array[Float](EmbeddingDim)
-    out(0) = width / 1000.0f
-    out(1) = height / 1000.0f
-    out(2) = (sr / np / 255.0).toFloat
-    out(3) = (sg / np / 255.0).toFloat
-    out(4) = (sb / np / 255.0).toFloat
-    out(5) = (sl / np).toFloat
-    out(6) = math.sqrt(math.max(sl2 / np - (sl / np) * (sl / np), 0.0)).toFloat
-    out(7) = if (hdiffN > 0) (hdiff / hdiffN).toFloat else 0f
-    var k = 0
-    while (k < 8) {
-      out(8 + k) = if (gridN(k) > 0) (grid(k) / gridN(k)).toFloat else 0f
-      k += 1
-    }
-    out
-  }
-
-  /** Real BMP decode: 24bpp uncompressed (BI_RGB), bottom-up or
-    * top-down; pixel features via [[pixelFeatures]]. */
-  private[ops] def decodeBmp(b: Array[Byte]): Array[Float] = {
-    require(b.length >= 54, "truncated BMP header")
-    val dataOff = i32(b, 10)
-    val width = i32(b, 18)
-    val heightRaw = i32(b, 22)
-    val bpp = i16(b, 28)
-    val compression = i32(b, 30)
-    require(bpp == 24, s"unsupported bpp $bpp (24-bit only)")
-    require(compression == 0, s"unsupported compression $compression")
-    require(width > 0 && heightRaw != 0, "bad BMP dimensions")
-    val height = math.abs(heightRaw)
-    val topDown = heightRaw < 0
-    val rowBytes = ((width * 3 + 3) / 4) * 4
-    require(dataOff + rowBytes.toLong * height <= b.length, "truncated BMP pixels")
-    pixelFeatures(width, height, (x, y) => {
-      val srcRow = if (topDown) y else height - 1 - y
-      val o = dataOff + srcRow * rowBytes + x * 3 // stored B,G,R
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 1) & 0xff) << 8) | (b(o) & 0xff)
-    })
-  }
-
-  private def be32(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  /** Real PNG decode — pure JVM, no codec library: PNG's only
-    * compression is zlib DEFLATE, which the JDK ships
-    * (`java.util.zip.Inflater`). Full implementation: chunk walk
-    * (IHDR/IDAT+/IEND), inflate of the concatenated IDAT stream, and
-    * per-scanline de-filtering (None/Sub/Up/Average/Paeth — the five
-    * filters of the PNG spec §9). Supports the dominant web shapes:
-    * 8-bit truecolor (type 2) and truecolor+alpha (type 6),
-    * non-interlaced; alpha is ignored for features (the reference's
-    * grounding features are RGB-derived). Truncation/corruption
-    * THROWS; [[extractFeatures]] captures per row. */
-  private[ops] def decodePng(b: Array[Byte]): Array[Float] = {
-    var o = 8
-    var width = 0; var height = 0; var colorType = -1
-    var seenIhdr = false; var done = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (!done && o + 8 <= b.length) {
-      val len = be32(b, o)
-      require(len >= 0 && o + 12 + len <= b.length, "truncated PNG chunk")
-      new String(b, o + 4, 4, "US-ASCII") match {
-        case "IHDR" =>
-          require(len == 13, "bad IHDR length")
-          width = be32(b, o + 8); height = be32(b, o + 12)
-          val bitDepth = b(o + 16) & 0xff; colorType = b(o + 17) & 0xff
-          require(width > 0 && height > 0, "bad PNG dimensions")
-          require(bitDepth == 8, s"unsupported bit depth $bitDepth (8 only)")
-          require(colorType == 2 || colorType == 6,
-            s"unsupported color type $colorType (truecolor/truecolor+alpha only)")
-          require((b(o + 18) & 0xff) == 0 && (b(o + 19) & 0xff) == 0 &&
-            (b(o + 20) & 0xff) == 0, "unsupported compression/filter/interlace")
-          seenIhdr = true
-        case "IDAT" => idat.write(b, o + 8, len)
-        case "IEND" => done = true
-        case _      => () // ancillary chunks (tEXt, gAMA, ...) skipped
-      }
-      o += 12 + len
-    }
-    require(seenIhdr, "no IHDR chunk")
-    require(idat.size() > 0, "no IDAT chunk")
-    val bpp = if (colorType == 6) 4 else 3
-    val stride = width * bpp
-    val raw = new Array[Byte]((stride + 1) * height)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    try {
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && inf.needsInput()) // stream ended early
-          throw new IllegalArgumentException("truncated IDAT stream")
-        got += n
-      }
-    } finally inf.end()
-    require(got == raw.length, s"IDAT decoded $got of ${raw.length} bytes")
-    // de-filter scanlines into a packed top-down pixel buffer
-    val px = new Array[Byte](stride * height)
-    var y = 0
-    while (y < height) {
-      val f = raw(y * (stride + 1)) & 0xff
-      val rs = y * (stride + 1) + 1
-      val ps = y * stride
-      var x = 0
-      while (x < stride) {
-        val rv = raw(rs + x) & 0xff
-        val left = if (x >= bpp) px(ps + x - bpp) & 0xff else 0
-        val up = if (y > 0) px(ps - stride + x) & 0xff else 0
-        val upLeft = if (x >= bpp && y > 0) px(ps - stride + x - bpp) & 0xff else 0
-        val v = f match {
-          case 0 => rv
-          case 1 => rv + left
-          case 2 => rv + up
-          case 3 => rv + ((left + up) / 2)
-          case 4 => // Paeth predictor (PNG spec §9.4)
-            val p = left + up - upLeft
-            val pa = math.abs(p - left); val pb = math.abs(p - up)
-            val pc = math.abs(p - upLeft)
-            rv + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft)
-          case other => throw new IllegalArgumentException(s"bad PNG filter $other")
-        }
-        px(ps + x) = (v & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    pixelFeatures(width, height, (x, yy) => {
-      val p = yy * stride + x * bpp // stored R,G,B[,A]
-      ((px(p) & 0xff) << 16) | ((px(p + 1) & 0xff) << 8) | (px(p + 2) & 0xff)
-    })
-  }
-
-  /** STUB for the remaining codec-bound MEDIA formats (MP3/AAC audio,
-    * H.264/VP9 video — no JDK decoder exists and this container ships
-    * no codec libraries) — deterministic bytes→features fake (chunked
-    * byte sums, L2-normalized); marked intentionally. */
-  private[ops] def stubKernel(payload: Array[Byte]): Array[Float] = {
-    val acc = new Array[Float](EmbeddingDim)
-    var i = 0
-    while (i < payload.length) {
-      acc(i % EmbeddingDim) += (payload(i) & 0xff) / 255.0f
-      i += 1
-    }
-    val n = math.sqrt(acc.map(v => v * v).sum).toFloat
-    if (n == 0f) acc else acc.map(_ / n)
-  }
-
   /** Partition-parallel feature extraction over binary payloads.
     * mapPartitions (not per-row map) so a real kernel can amortize
     * codec/model init per partition — the batch shape a Pandas-UDF /
@@ -355,7 +122,7 @@ object Multimodal {
       // per-partition init point for a real codec/model handle
       rows.map { r =>
         try {
-          val emb = decodeKernel(if (r.payload == null) Array.emptyByteArray else r.payload)
+          val emb = decodeWav(if (r.payload == null) Array.emptyByteArray else r.payload)
           MediaFeatures(r.media_id, r.modality,
             if (r.payload == null) 0 else r.payload.length, emb, ok = true, null)
         } catch {
@@ -364,21 +131,6 @@ object Multimodal {
               ok = false, e.getMessage)
         }
       }
-    }
-  }
-
-  /** Deterministic synthetic media table (payload = seeded bytes) for
-    * tests/benches — no external data. */
-  def syntheticMedia(spark: SparkSession, n: Int, seed: Long = 42L): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n).map { i =>
-      val mod = Array("image", "audio", "video").apply((i % 3).toInt)
-      val len = 64 + (Math.floorMod(i * 2654435761L + seed, 192L)).toInt
-      val payload = Array.tabulate(len)(j =>
-        ((i * 31 + j * 7 + seed) % 251).toByte)
-      MediaRow(f"m$i%06d", mod, payload,
-        if (mod != "audio") 64 else 0, if (mod != "audio") 48 else 0,
-        if (mod != "image") 1000 + (i % 9000) else 0, f"doc${i % 97}%04d")
     }
   }
 
@@ -424,53 +176,12 @@ object Multimodal {
       val a = ((id * 37) % 2001 - 1000).toShort
       val bb = ((id * 73) % 4001 - 2000).toShort
       val samples = Array.tabulate(128)(i => if (i < 64) a else bb)
-      MediaRow(id.toString, "audio", wavEncode(samples, sampleRate = 8192),
-        0, 0, 0L, s"doc$id")
+      MediaRow(id.toString, "audio", wavEncode(samples, sampleRate = 8192))
     }
     extractFeatures(media)
       .filter(_.ok) // malformed rows would vanish → rows_match catches it
       .map(f => (f.media_id.toLong, f.embedding(0), f.embedding(1),
         f.embedding(2), f.embedding(3), f.embedding(4)))
       .toDF("doc_id", "dur_s", "rms", "zcr", "mean_abs", "peak")
-  }
-
-  /** Frame-sampling plumbing for video: one row per sampled frame
-    * time, ready for a per-frame decode. Payloads that parse as a real
-    * container (MP4 stss⋈stts sync samples, Matroska CueTimes — see
-    * [[Containers]]) emit THEIR OWN keyframe timestamps; everything
-    * else (raw/unparseable payloads, containers without sample tables)
-    * falls back to stride sampling over the metadata `duration_ms`.
-    * flatMap, not Column explode: the container walk is a JVM kernel
-    * either way, and per-row failure falls through to the stride path
-    * rather than killing the job (fail.log semantics). */
-  def sampleFrames(media: DataFrame, everyMs: Long = 1000L,
-      maxFramesPerDoc: Int = 100000): DataFrame = {
-    require(everyMs > 0, s"everyMs=$everyMs must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("modality") === "video")
-      // NULL duration (unknown upstream metadata) behaves like 0 — a
-      // single probe frame at t=0 — instead of the tuple encoder's
-      // non-nullable-field error aborting the job on one bad row
-      .select(col("media_id"), col("payload"),
-        coalesce(col("duration_ms"), lit(0L)).as("duration_ms"))
-      .as[(String, Array[Byte], Long)]
-      .flatMap { case (id, payload, durMs) =>
-        val meta = Containers.probe(id, payload)
-        val times: Seq[Long] =
-          if (meta.ok && meta.keyframes_ms.nonEmpty) meta.keyframes_ms
-          else {
-            // duration_ms is UNTRUSTED upstream metadata on exactly the
-            // rows that take this fallback (the container didn't parse):
-            // cap the stride fan-out so a corrupt Long.MaxValue duration
-            // can't build a >2^31-element range and kill the job this
-            // method's fail-through contract promises to survive
-            val n = math.min(math.max(durMs - 1, 0L) / everyMs + 1L,
-              maxFramesPerDoc.toLong)
-            (0L until n).map(_ * everyMs)
-          }
-        times.map(t => (id, t, payload))
-      }
-      .toDF("media_id", "frame_ms", "payload")
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -10,10 +9,11 @@ import org.apache.spark.sql.functions._
  * /root/reference/update_kg/queries/get_merged_entity.sparql
  * `?vector`; ELMo/PNASNET grounding embeddings).
  *
- * Baseline: brute-force cosine top-k (one scan + one top-k — correct
- * at any scale, cost O(N·d) per query). Scale path: random-hyperplane
- * LSH bucketing — queries only touch their bucket's rows. All dot
- * products use built-in zip_with/aggregate (codegen, no UDF).
+ * Top-k search is brute-force cosine (one scan + one top-k — correct
+ * at any scale, cost O(N·d) per query). All-pairs near-dup detection
+ * has an exact O(n²) form and a banded random-hyperplane LSH form
+ * ([[cosinePairs]]) whose recall the `q_cosine_pairs_lsh` oracle
+ * checks. Cosine is one native expression (no UDF).
  */
 object Similarity {
 
@@ -24,10 +24,9 @@ object Similarity {
     call_function("graft_cosine", a, b)
 
   /** Brute-force cosine top-k against one query vector (driver-held,
-    * broadcast as a literal array). vec_id is cast to long so every
-    * ANN path — this one, the probed branches, and their fallbacks —
-    * returns one schema (vec_id bigint, sim double) regardless of the
-    * caller's integer width. */
+    * broadcast as a literal array). vec_id is cast to long so the
+    * result has one schema (vec_id bigint, sim double) regardless of
+    * the caller's integer width. */
   def bruteForceTopK(embeddings: DataFrame, query: Seq[Float], k: Int = 10): DataFrame = {
     val q = array(query.map(v => lit(v.toDouble)): _*)
     embeddings
@@ -35,234 +34,6 @@ object Similarity {
         round(cosine(col("embedding"), q), 6).as("sim"))
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(k)
-  }
-
-  /** Deterministic pseudo-random hyperplane sign for LSH: sign of a
-    * seeded hash-derived weight, applied per dimension; nBits-bit
-    * bucket id per row. Seeded → stable across runs/parallelism. One
-    * native projection ([[graft.functions.LshBucketExpr]]; bucket
-    * values bit-identical to the Column-algebra formulation it
-    * replaces). */
-  def lshBuckets(embeddings: DataFrame, nBits: Int = 8, seed: Int = 42): DataFrame =
-    embeddings.withColumn("bucket",
-      call_function("graft_lsh_bucket", col("embedding"), lit(nBits), lit(seed)))
-
-  /** LSH-bucketed ANN with MULTI-PROBE: candidates come from the
-    * query's bucket plus every bucket within Hamming distance
-    * `probeHamming` of it (flipping ≤h of the nBits hyperplane signs —
-    * the standard multi-probe LSH recall lever: near neighbors that
-    * land one hyperplane away are still found without lowering nBits).
-    * If the probed buckets hold fewer than k rows, falls back to
-    * global brute force, so the result NEVER silently returns <k rows.
-    * Cost: one cheap probe-count action, then top-k over the bucket
-    * subset (or the full scan on fallback). */
-  def lshTopK(embeddings: DataFrame, query: Seq[Float], k: Int = 10,
-      nBits: Int = 8, probeHamming: Int = 1): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bucketed = lshBuckets(embeddings, nBits)
-    val qDf = spark.createDataset(Seq((0L, query))).toDF("vec_id", "embedding")
-    val qBucket = lshBuckets(qDf, nBits).select(col("bucket")).head().getLong(0)
-    val probes: Seq[Long] = {
-      def flips(base: Long, fromBit: Int, left: Int): Seq[Long] =
-        if (left == 0) Seq(base)
-        else (fromBit until nBits).flatMap(b => flips(base ^ (1L << b), b + 1, left - 1))
-      (0 to probeHamming).flatMap(h => flips(qBucket, 0, h)).distinct
-    }
-    val cand = bucketed.filter(col("bucket").isin(probes: _*))
-    // ONE scan of the probed subset: the top-k itself is the underfill
-    // probe (k rows are driver-sized by contract) — the former
-    // limit(k).count() pre-check scanned the candidates twice
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    // vec_id cast to long: rebuilt rows must read back via getLong for
-    // ANY caller integer width, and both branches share one schema
-    val top = cand.select(col("vec_id").cast("long").as("vec_id"),
-        round(cosine(col("embedding"), q), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(k)
-      .collect()
-    if (top.length < k) bruteForceTopK(embeddings, query, k)
-    else spark.createDataset(top.toIndexedSeq.map(r => (r.getLong(0), r.getDouble(1))))
-      .toDF("vec_id", "sim")
-  }
-
-  /** IVF (inverted-file) ANN index: a k-means coarse quantizer
-    * (MLlib, distributed Lloyd iterations) assigns every vector to its
-    * nearest of `nCentroids` centroids — the classic IVF-Flat scale
-    * path: queries touch only the posting lists of their `nprobe`
-    * nearest centroids instead of the corpus. Returns the assigned
-    * DataFrame (embedding + `centroid`) and the driver-held centroid
-    * matrix (k×d doubles — tiny, broadcast-by-literal at query time). */
-  def ivfIndex(embeddings: DataFrame, nCentroids: Int = 16,
-      seed: Long = 42L, fitSampleFraction: Double = 1.0): (DataFrame, Array[Array[Double]]) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    require(fitSampleFraction > 0.0 && fitSampleFraction <= 1.0,
-      s"fitSampleFraction must be in (0,1], got $fitSampleFraction")
-    val feat = embeddings.withColumn("features",
-      array_to_vector(col("embedding").cast("array<double>")))
-    // SAMPLE-FIT: at corpus scale the quantizer is fit on a seeded
-    // sample (Lloyd iterations over 10^11 vectors would dominate the
-    // whole index build); the FULL corpus is then only ASSIGNED — one
-    // pure-projection transform pass. Centroid quality converges at
-    // ~1000 points/centroid, so a tiny fraction suffices.
-    val fitOn =
-      if (fitSampleFraction >= 1.0) feat
-      else feat.sample(withReplacement = false, fitSampleFraction, seed)
-    val model = new KMeans().setK(nCentroids).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("centroid")
-      .fit(fitOn)
-    val assigned = model.transform(feat).drop("features")
-    (assigned, model.clusterCenters.map(_.toArray))
-  }
-
-  /** Queries with fewer than k candidates in `cand` — INCLUDING
-    * queries with ZERO candidates (every probed bucket / posting list
-    * empty), which a `cand`-derived group-by would silently drop: the
-    * under-returning fallback set must come from `queries`, the only
-    * frame guaranteed to hold one row per query. */
-  private def underfilled(queries: DataFrame, cand: DataFrame, k: Int): DataFrame = {
-    val enough = cand.groupBy(col("query_id")).agg(count(lit(1)).as("nc"))
-      .filter(col("nc") >= k).select(col("query_id"))
-    queries.join(enough, Seq("query_id"), "left_anti").select(col("query_id"))
-  }
-
-  /** IVF ANN top-k: probe the `nprobe` centroids nearest to the query
-    * (driver-side over the tiny centroid matrix), cosine top-k within
-    * their posting lists; brute-force fallback below k candidates —
-    * same never-under-returns contract as [[lshTopK]]. */
-  def ivfTopK(assigned: DataFrame, centers: Array[Array[Double]],
-      query: Seq[Float], k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val qd = query.map(_.toDouble).toArray
-    def dist2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length && i < qd.length) { val d = c(i) - qd(i); s += d * d; i += 1 }
-      s
-    }
-    val probes = centers.zipWithIndex.sortBy { case (c, _) => dist2(c) }
-      .take(math.max(nprobe, 1)).map(_._2.toLong)
-    val cand = assigned.filter(col("centroid").isin(probes: _*))
-    // single scan of the posting lists (see lshTopK): top-k doubles as
-    // the underfill check, k rows are driver-sized
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    // long cast for the same any-integer-width / one-schema contract
-    // as lshTopK
-    val top = cand.select(col("vec_id").cast("long").as("vec_id"),
-        round(cosine(col("embedding"), q), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(k)
-      .collect()
-    if (top.length < k)
-      bruteForceTopK(assigned.drop("centroid"), query, k)
-    else spark.createDataset(top.toIndexedSeq.map(r => (r.getLong(0), r.getDouble(1))))
-      .toDF("vec_id", "sim")
-  }
-
-  /** BATCH IVF ANN: top-k for a whole TABLE of query vectors in one
-    * distributed plan — no per-query driver loop ([[ivfTopK]]'s shape
-    * is the single-query building block; at corpus scale queries
-    * arrive as a table). `queries` needs (query_id, embedding).
-    *
-    * Plan: queries × broadcast(centroids) → per-query `nprobe` nearest
-    * centroids (window over a tiny cross product) → equi-join with the
-    * posting lists on `centroid` → per-query cosine top-k window.
-    * Same never-under-returns contract as [[ivfTopK]]: queries whose
-    * probed posting lists hold fewer than k candidates are re-run
-    * against the full corpus (only those queries — an anti-join-gated
-    * fallback, empty in the common case). */
-  def ivfTopKBatch(assigned: DataFrame, centers: Array[Array[Double]],
-      queries: DataFrame, k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cents = spark.createDataset(centers.toSeq.zipWithIndex
-        .map { case (c, i) => (i.toLong, c.toSeq) })
-      .toDF("centroid", "c_emb")
-    // squared euclidean via HOF fold — centroid table is tiny
-    // (nCentroids rows), so the interpreted lambda cost is bounded by
-    // nQueries × nCentroids, never corpus-scale
-    val d2 = aggregate(
-      zip_with(col("q_emb").cast("array<double>"), col("c_emb"),
-        (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col("centroid").asc)
-    val probes = queries
-      .select(col("query_id"), col("embedding").as("q_emb"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d2", d2)
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= math.max(nprobe, 1))
-      .select(col("query_id"), col("q_emb"), col("centroid"))
-    val cand = probes.join(assigned.select(col("vec_id"), col("embedding"),
-      col("centroid")).hint("merge"), "centroid")
-    // fallback: queries with under-filled (or EMPTY) posting lists go
-    // brute-force — anti-join against the well-filled set, so a query
-    // with zero candidates (absent from `cand` entirely) still falls
-    // back, matching the single-query ivfTopK contract
-    val short = underfilled(queries, cand, k)
-    val fallback = queries
-      .join(short, "query_id")
-      .select(col("query_id"), col("embedding").as("q_emb"))
-      .crossJoin(assigned.select(col("vec_id"), col("embedding")))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    cand.select(col("query_id"), col("q_emb"), col("vec_id"), col("embedding"))
-      .unionByName(fallback)
-      .dropDuplicates("query_id", "vec_id")
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("q_emb")), 6).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
-  }
-
-  /** BATCH LSH ANN: multi-probe top-k for a whole TABLE of query
-    * vectors — the [[lshTopK]] semantics with no per-query driver
-    * round-trips. `queries` needs (query_id, embedding).
-    *
-    * Plan: bucket the corpus once (checkpointed — one kernel eval per
-    * vector, shared by the candidate join and the fallback scan),
-    * bucket the queries with the SAME seeded hyperplanes, explode each
-    * query to its ≤Hamming-h probe buckets (the flip masks depend only
-    * on nBits/probeHamming — a driver-side literal array), equi-join on
-    * `bucket`, per-query cosine top-k window. Queries whose probed
-    * buckets hold fewer than k candidates are re-run against the full
-    * corpus (anti-join-gated per-query fallback — the same
-    * never-under-returns contract as [[lshTopK]]). */
-  def lshTopKBatch(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
-      nBits: Int = 8, probeHamming: Int = 1, seed: Int = 42): DataFrame = {
-    val b = lshBuckets(embeddings, nBits, seed)
-      .select(col("vec_id"), col("embedding"), col("bucket"))
-      .localCheckpoint(true)
-    def flips(base: Long, fromBit: Int, left: Int): Seq[Long] =
-      if (left == 0) Seq(base)
-      else (fromBit until nBits).flatMap(bit =>
-        flips(base ^ (1L << bit), bit + 1, left - 1))
-    val masks = (0 to probeHamming).flatMap(h => flips(0L, 0, h)).distinct
-    val probes = lshBuckets(
-        queries.select(col("query_id"), col("embedding")), nBits, seed)
-      .select(col("query_id"), col("embedding").as("q_emb"),
-        explode(array(masks.map(m =>
-          col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val cand = probes.join(b.hint("merge"), "bucket")
-      .select(col("query_id"), col("q_emb"), col("vec_id"), col("embedding"))
-    // zero-candidate queries (all probed buckets empty — the common
-    // LSH miss mode for outliers) MUST fall back too: see underfilled
-    val short = underfilled(queries, cand, k)
-    val fallback = queries.join(short, "query_id")
-      .select(col("query_id"), col("embedding").as("q_emb"))
-      .crossJoin(b.select(col("vec_id"), col("embedding")))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    cand.unionByName(fallback)
-      .dropDuplicates("query_id", "vec_id")
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("q_emb")), 6).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
   }
 
   /** All-pairs near-duplicate detection by embedding cosine ≥ τ —

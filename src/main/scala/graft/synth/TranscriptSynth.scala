@@ -35,7 +35,6 @@ object TranscriptSynth {
       hotPct: Int = 30) {
     def nTurns: Long = nConvs.toLong * turnsPerConv
     def nGpes: Int = Lexicon.gpeGazetteer.length
-    def nFamilies: Int = nPersons + nOrgs + nGpes
   }
 
   // ---- deterministic mixing -------------------------------------------
