@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.canon.{EventCoref, Justifications, RelationClusters}
 import graft.ops.{Clean, Dedup, Multimodal, Similarity, TextStats}
 import graft.schema.{Membership, Mention, Prototype, Statement}
+import graft.superedge.SuperEdges
 import graft.synth.TranscriptSynth
 
 /**
@@ -290,13 +291,16 @@ object SparkEntry {
       Similarity.cosinePairs(base.unionByName(dup), 0.95)
     }),
     // ---- cluster-op shapes over testdata tables (DuckDB-oracled):
-    // the REAL pipeline operators (RelationClusters / Justifications)
-    // driven by deterministic statement/membership tables derived from
-    // `events`, so the driver hash-checks the exact code paths the KG
+    // the REAL pipeline operators (RelationClusters / Justifications),
+    // composed as Pipeline.stages composes them, driven by
+    // deterministic statement/membership tables derived from `events`,
+    // so the DuckDB oracle hash-checks the exact code paths the KG
     // pipeline runs.
     "q_relation_clusters" -> ((s, d) => {
       val (stmts, ms) = fabricatedStatements(s, d)
-      RelationClusters.cluster(stmts, ms) // row-shaped: one row per member
+      // row-shaped: one row per member; n_members is the superedge cnt
+      val r = SuperEdges.resolvedStatements(stmts, ms)
+      RelationClusters.clusterFromResolved(r, SuperEdges.superEdgesFromResolved(r))
     }),
     "q_connected_components" -> ((s, d) => { // C4: the REAL CC operator,
       // DuckDB-oracled via a recursive-CTE transitive closure on a
@@ -319,15 +323,18 @@ object SparkEntry {
     }),
     "q_superedge_justif" -> ((s, d) => { // superedge justification copy
       val (stmts, ms) = fabricatedStatements(s, d)
-      Justifications.superEdgeJustifications(stmts, ms)
+      Justifications.superEdgeJustificationsFromResolved(
+        SuperEdges.resolvedStatements(stmts, ms))
     }),
     "q_proto_justi" -> ((s, d) => { // prototype justification copy-back
       val (mentions, ms, protos) = fabricatedClusters(s, d)
-      Justifications.prototypeJustifications(ms, mentions, protos)
+      Justifications.prototypeJustificationsFrom(
+        Justifications.annotatedMembers(ms, mentions), protos)
     }),
     "q_inf_just" -> ((s, d) => { // A3 informative justification (conf argmax per doc)
       val (mentions, ms, _) = fabricatedClusters(s, d)
-      Justifications.informativeJustifications(ms, mentions)
+      Justifications.informativeJustificationsFrom(
+        Justifications.annotatedMembers(ms, mentions))
     }),
     // ---- the KG pipeline itself (non-SQL; golden-tested in ScalaTest)
     "q_kg_triples" -> ((s, _) => {

@@ -1,33 +1,46 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py).
+  *
+  * An unknown name in SPARK_GRAFT_VERIFY_ONLY exits 2 before the
+  * session starts; a query that fails is reported and the run exits 1
+  * once the remaining dumps and oracle_sql.json are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev lever: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump to
+    // named queries (e.g. re-validating one oracle at a larger sf)
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // same tuned local session as the rest of the engine (tmpfs
     // shuffle dirs, AQE, small-file split sizing) — see graft.Sessions
     val spark = Sessions.local(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev lever: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump to
-    // named queries (e.g. re-validating one oracle at a larger sf)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries are independent: drop any checkpoint blocks a pipeline
-      // query pinned so later queries don't run on a half-full heap
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+      .filterNot { case (name, fn) =>
+        val ok =
+          try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name"); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}"); false
+          }
+        // queries are independent: drop any checkpoint blocks a pipeline
+        // query pinned so later queries don't run on a half-full heap
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+        ok
+      }.map(_._1)
     // golden-truth parquet next to the dumps: the planted triple/frame
     // sets are enumerable pure functions of the synth config, and the
     // q_kg_*_golden oracle SQL full-joins the pipeline dumps against
@@ -84,5 +97,9 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"failed queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,10 +1,9 @@
 package graft.canon
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.schema.{Membership, Mention, Prototype, Statement}
+import graft.schema.{Membership, Mention, Prototype}
 
 /**
  * Cluster-level justification/link aggregation — the reference's
@@ -16,14 +15,16 @@ import graft.schema.{Membership, Mention, Prototype, Statement}
  * path takes max over the justification IRI STRING (an admitted
  * workaround, update_kg/sparqls.py:244-270), the Python path takes
  * max CONFIDENCE per doc (update_kg/Updater.py:368-377). We implement
- * the confidence semantics as primary (documented divergence,
- * SURVEY.md §7.4.1) and expose the IRI-max variant for parity tests.
+ * the confidence semantics only (documented divergence, SURVEY.md
+ * §7.4.1).
  *
  * A4 — cluster links: best confidence per (cluster, link target)
  * (update_kg/sparqls.py:273-299; Python twin Updater.py:497-507).
  *
- * Both are single window/groupBy passes over the membership join —
- * partial aggregation absorbs hot clusters.
+ * Both are single groupBy passes over the membership join — partial
+ * aggregation absorbs hot clusters. The `…From` forms take the shared
+ * [[annotatedMembers]] (or resolved-statement) frame, as
+ * `Pipeline.stages` runs them.
  */
 object Justifications {
 
@@ -83,23 +84,9 @@ object Justifications {
         col("best.end_off").as("end_off"),
         (-col("best.nc")).as("conf"))
 
-  /** A3, reference-SPARQL IRI-max variant: max over the member id
-    * string (update_kg/sparqls.py:258-268) — kept for parity tests. */
-  def informativeJustificationsIriMax(memberships: Dataset[Membership],
-      mentions: Dataset[Mention]): DataFrame = {
-    val j = memberships.toDF().select(col("cluster_id"), col("member_id"))
-      .join(mentions.toDF().withColumnRenamed("mention_id", "member_id"), "member_id")
-    j.groupBy(col("cluster_id"), col("conv_id"))
-      .agg(max(col("member_id")).as("member_id"))
-  }
-
-  /** A4: best link confidence per (cluster, link target); NILs
-    * excluded (DUMMY semantics). */
-  def clusterLinks(memberships: Dataset[Membership],
-      mentions: Dataset[Mention]): DataFrame =
-    clusterLinksFrom(annotatedMembers(memberships, mentions))
-
-  /** [[clusterLinks]] over a precomputed [[annotatedMembers]] join. */
+  /** A4: best link confidence per (cluster, link target) over a
+    * precomputed [[annotatedMembers]] join; NILs excluded (DUMMY
+    * semantics). */
   def clusterLinksFrom(annotated: DataFrame): DataFrame =
     annotated
       .filter(col("link_target").isNotNull)
@@ -109,16 +96,11 @@ object Justifications {
   /** Prototype justification copy-back — the reference's `proto_justi`
     * (update_kg/sparqls.py:391-410): EVERY member's justification span
     * is copied onto the cluster prototype (one row per member, not an
-    * argmax). A single 1:1 join on unique member_id plus a broadcast-
-    * size prototype join — no skew surface. */
-  def prototypeJustifications(memberships: Dataset[Membership],
-      mentions: Dataset[Mention], prototypes: Dataset[Prototype]): DataFrame =
-    prototypeJustificationsFrom(annotatedMembers(memberships, mentions), prototypes)
-
-  /** [[prototypeJustifications]] over a precomputed [[annotatedMembers]].
-    * `broadcastProtos`: the prototype side is one row per cluster —
-    * callers that measured the cluster count under the broadcast gate
-    * set it so the member-scale annotated side never shuffles (plan
+    * argmax), over a precomputed [[annotatedMembers]]: a prototype-size
+    * join on cluster_id — no skew surface. `broadcastProtos`: the
+    * prototype side is one row per cluster — callers that measured the
+    * cluster count under the broadcast gate set it so the member-scale
+    * annotated side never shuffles (plan
     * capture showed Catalyst sort-merging 2.5M member rows against a
     * 483-row prototype table off checkpoint estimates). */
   def prototypeJustificationsFrom(annotated: DataFrame,
@@ -135,13 +117,7 @@ object Justifications {
 
   /** Prototype INFORMATIVE justification copy-back — `proto_inf_just`
     * (update_kg/sparqls.py:413-430): the per-(cluster, doc) best
-    * justification (A3) keyed by the prototype. */
-  def prototypeInformativeJustifications(memberships: Dataset[Membership],
-      mentions: Dataset[Mention], prototypes: Dataset[Prototype]): DataFrame =
-    prototypeInformativeJustificationsFrom(
-      informativeJustifications(memberships, mentions), prototypes)
-
-  /** [[prototypeInformativeJustifications]] over precomputed
+    * justification (A3) keyed by the prototype, over precomputed
     * [[informativeJustifications]] rows. */
   def prototypeInformativeJustificationsFrom(informative: DataFrame,
       prototypes: Dataset[Prototype]): DataFrame =
@@ -172,64 +148,17 @@ object Justifications {
 
   /** Superedge justification copy — `super_edge_justif`
     * (update_kg/sparqls.py:509-527): each superedge carries the
-    * justification spans of ALL its member statements. Same 1:1
-    * mention-id joins as the superedge build itself (SURVEY §2.3 J9 —
-    * skew-free by construction); the output key (subj_proto, pred,
-    * obj_proto) matches [[graft.superedge.SuperEdges.superEdges]]. */
-  def superEdgeJustifications(statements: Dataset[Statement],
-      memberships: Dataset[Membership]): DataFrame =
-    superEdgeJustificationsFromResolved(
-      graft.superedge.SuperEdges.resolvedStatements(statements, memberships))
-
-  /** [[superEdgeJustifications]] over a PRECOMPUTED (checkpointed)
-    * resolved-statement join — a pure projection; the
+    * justification spans of ALL its member statements. A pure
+    * projection of a PRECOMPUTED (checkpointed) resolved-statement
+    * join ([[graft.superedge.SuperEdges.resolvedStatements]]); the
     * statements⋈memberships² subtree is shared with the superedge and
-    * relation-cluster outputs (guide-§2.4 shuffle removal). */
+    * relation-cluster outputs (guide-§2.4 shuffle removal), and the
+    * output key (subj_proto, pred, obj_proto) matches
+    * [[graft.superedge.SuperEdges.superEdgesFromResolved]]. */
   def superEdgeJustificationsFromResolved(resolved: DataFrame): DataFrame =
     resolved
       .select(col("subj_cluster").as("subj_proto"), col("pred"),
         col("obj_cluster").as("obj_proto"),
         col("stmt_id"), col("conv_id"), col("turn_idx"),
         col("start_off"), col("end_off"), col("conf"))
-
-  /** Modality-typed cluster informative justifications — the
-    * reference's `generate_cluster_inf_just_df` pandas loop
-    * (update_kg/Updater.py:360-487): members' justification rows
-    * (sparse CSV columns per modality — text offsets, image/keyframe
-    * bounding boxes, shot id, audio timestamps) are argmaxed by
-    * confidence per (cluster, source doc), and the winner is emitted
-    * as a typed record tagged with its modality. The reference's
-    * replace-on-strictly-greater iteration makes ties order-dependent;
-    * we tie-break deterministically (entity asc, then just_type) —
-    * documented divergence, same class as SURVEY.md §7.4.1. NaN→0
-    * bbox coercion is the reader's job
-    * ([[graft.sources.SideFormats.readInfJustCsv]], Updater.py:462-465). */
-  def clusterModalityJustifications(memberships: Dataset[Membership],
-      ij: DataFrame): DataFrame = {
-    val j = memberships.toDF()
-      .select(col("cluster_id"), col("member_id").as("entity"))
-      .join(ij, "entity")
-    val w = Window.partitionBy(col("cluster_id"), col("just_doc"))
-      .orderBy(col("just_confidence_value").desc, col("entity").asc,
-        col("just_type").asc)
-    j.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .withColumn("modality",
-        when(col("just_type") === "aida:TextJustification", "text")
-          .when(col("just_type") === "aida:ImageJustification", "image")
-          .when(col("just_type") === "aida:KeyFrameVideoJustification", "keyframe_video")
-          .when(col("just_type") === "aida:ShotVideoJustification", "shot_video")
-          .when(col("just_type") === "aida:AudioJustification", "audio")
-          .otherwise("unknown"))
-  }
-
-  /** P9: deterministic DUMMY link synthesis for NIL mentions — the
-    * reference's global counter (json_head/get_json_head.py:10,18-20)
-    * replaced by a content hash so re-runs emit identical links
-    * (SURVEY.md §7.4 determinism). DUMMYs never block-match. */
-  def withDummyLinks(mentions: DataFrame): DataFrame =
-    mentions.withColumn("link_target",
-      coalesce(col("link_target"),
-        concat(lit("DUMMY:"), md5(col("mention_id")))))
 }

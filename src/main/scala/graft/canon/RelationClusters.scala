@@ -3,7 +3,7 @@ package graft.canon
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.schema.{Membership, Statement, SuperEdge}
+import graft.schema.SuperEdge
 
 /**
  * Deterministic relation clustering — the reference's
@@ -31,92 +31,48 @@ object RelationClusters {
     * relation cluster (hot entity family × hot predicate — guaranteed
     * under the synth's 30% skew at scale) must never accumulate one
     * unbounded member ARRAY in the pipeline output (the 2GB-row hazard
-    * class); the reference's `.jl` line format needs the array only at
-    * the sink — see [[graft.sources.SideFormats.writeRelationsJl]].
+    * class); the reference's `.jl` line format would need the array
+    * only at a sink, and no sink writes one.
     *
-    * `n_members` is a TWO-PHASE count joined back per row, NOT a
-    * window count (which would shuffle and sort every member row of
-    * the hot cluster into a single window task). The join-back is
-    * merge-hinted like every other cluster-scale join here: its count
-    * side is one row per relation cluster — corpus-growing, and size
-    * ESTIMATES on checkpoint-descended frames undercount, so letting
-    * Catalyst broadcast it is an OOM at contract scale; the sort-merge
-    * join stays AQE skew-split-able (windows get no such skew
-    * handling).
-    *
-    * TWO FORMS. The pipeline form takes the already-materialized
-    * SuperEdge aggregate: its per-(subj_cluster, pred, obj_cluster)
-    * `cnt` IS n_members (rel_key is a tagged injective encoding of
-    * exactly that key), so the statements⋈memberships⋈memberships
-    * subtree runs ONCE — the count side is a cheap scan of a stage
-    * that exists anyway. The standalone form derives the counts by
-    * re-aggregating `keyed`, which would plan the corpus-scale joins
-    * twice — so it eagerly localCheckpoints `keyed` first (single
-    * execution; the pinned blocks ride the returned frame's plan and
-    * are released by the owner via [[graft.util.Blocks]], e.g.
-    * Pipeline.Result.unpersist or SnapshotStore's post-write release). */
-  def cluster(statements: Dataset[Statement], memberships: Dataset[Membership],
-      superEdges: Dataset[SuperEdge]): DataFrame =
-    clusterFromResolved(
-      graft.superedge.SuperEdges.resolvedStatements(statements, memberships),
-      superEdges)
-
-  /** Pipeline form over a PRECOMPUTED (checkpointed) resolved-statement
-    * join ([[graft.superedge.SuperEdges.resolvedStatements]]) — the
+    * Takes a PRECOMPUTED (checkpointed) resolved-statement join
+    * ([[graft.superedge.SuperEdges.resolvedStatements]]) and the
+    * SuperEdge aggregate over it: that aggregate's per-(subj_cluster,
+    * pred, obj_cluster) `cnt` IS n_members (rel_key is a tagged
+    * injective encoding of exactly that key), so the
     * statements⋈memberships² subtree is shared with the superedge and
     * superedge-justification outputs instead of re-executing here
-    * (guide-§2.4 shuffle removal; before/after in OPTIMIZATION_r06.md). */
+    * (guide-§2.4 shuffle removal; before/after in OPTIMIZATION_r06.md)
+    * and the count side is a cheap scan of a stage that exists anyway.
+    *
+    * `n_members` is therefore a TWO-PHASE count (the superedge
+    * groupBy's partial + final aggregate) joined back per row, NOT a
+    * window count (which would shuffle and sort every member row of
+    * the hot cluster into a single window task). The join-back is
+    * merge-hinted like every other cluster-scale join here: the count
+    * side is corpus-growing and checkpoint-descended size ESTIMATES
+    * undercount (the compile-time-broadcast hazard); the sort-merge
+    * join stays AQE skew-split-able (windows get no such skew
+    * handling). `broadcastCounts`: the caller MEASURED the count side
+    * under the broadcast gate — an explicit broadcast then spares the
+    * member rows the shuffle+sort entirely (guide §3.1). */
   def clusterFromResolved(resolved: DataFrame,
       superEdges: Dataset[SuperEdge],
-      broadcastCounts: Boolean = false): DataFrame =
-    attachCounts(keyedFromResolved(resolved),
-      superEdges.toDF().select(col("subj_proto").as("subj_cluster"),
-        col("pred"), col("obj_proto").as("obj_cluster"),
-        col("cnt").as("n_members")),
-      broadcastCounts)
-
-  /** Standalone form (no superedge stage available): `keyed` is
-    * eagerly materialized so its two corpus-scale joins execute once
-    * for both the count pass and the member rows. */
-  def cluster(statements: Dataset[Statement],
-      memberships: Dataset[Membership]): DataFrame = {
-    val keyed = keyedStatements(statements, memberships).localCheckpoint(true)
-    attachCounts(keyed,
-      keyed.groupBy(col("pred"), col("subj_cluster"), col("obj_cluster"))
-        .agg(count(lit(1)).as("n_members")))
-  }
-
-  /** Statements with their argument clusters resolved and the
-    * canonical sorted-link-set group key attached (lazy). */
-  private[graft] def keyedStatements(statements: Dataset[Statement],
-      memberships: Dataset[Membership]): DataFrame =
-    keyedFromResolved(
-      graft.superedge.SuperEdges.resolvedStatements(statements, memberships))
-
-  /** The canonical sorted-link-set group key over an already-resolved
-    * statement frame (lazy; no joins of its own). */
-  private[graft] def keyedFromResolved(resolved: DataFrame): DataFrame =
+      broadcastCounts: Boolean = false): DataFrame = {
+    val counts = superEdges.toDF().select(col("subj_proto").as("subj_cluster"),
+      col("pred"), col("obj_proto").as("obj_cluster"), col("cnt").as("n_members"))
     resolved
+      // the canonical sorted-link-set group key
       .withColumn("rel_key",
         concat_ws("|", col("pred"),
           array_join(array_sort(array(
             concat(lit("subj:"), col("subj_cluster")),
             concat(lit("obj:"), col("obj_cluster")))), ",")))
-
-  /** `broadcastCounts`: the caller MEASURED the count side (one row
-    * per relation cluster) under the broadcast gate — an explicit
-    * broadcast then spares the member rows the shuffle+sort entirely
-    * (guide §3.1); the default stays the always-safe merge join
-    * because the count side is corpus-growing and checkpoint-descended
-    * size ESTIMATES undercount (the compile-time-broadcast hazard). */
-  private def attachCounts(keyed: DataFrame, counts: DataFrame,
-      broadcastCounts: Boolean = false): DataFrame =
-    keyed
       .join(if (broadcastCounts) broadcast(counts) else counts.hint("merge"),
         Seq("pred", "subj_cluster", "obj_cluster"))
       .withColumn("relation_cluster_id", concat(lit("rc:"), md5(col("rel_key"))))
       .select(col("relation_cluster_id"), col("rel_key"),
         col("stmt_id"), col("n_members"))
+  }
 
   /** Per-cluster summary (one row per relation cluster, no member
     * arrays) — the reporting shape. */

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
  * corpus size — label propagation converges in a handful of rounds
  * where star-contraction's worst-case machinery isn't needed. Lineage
  * is truncated every round with an eager localCheckpoint so the plan
- * stays O(1) deep; `maxIter` bounds pathological inputs.
+ * stays O(1) deep; `maxIter` bounds pathological inputs: a run whose
+ * last round still changed a label throws instead of returning
+ * labels that have not converged.
  *
  * Scale notes: per round, one shuffle join (edges ⋈ labels, both
  * hash-partitioned on the join key and re-usable across rounds) and
@@ -114,6 +116,11 @@ object ConnectedComponents {
     }
     // the symmetric edge list served its last round
     graft.util.Blocks.release(sym)
+    if (changed > 0) {
+      graft.util.Blocks.release(labels)
+      throw new IllegalStateException("connected components did not converge " +
+        s"in maxIter=$maxIter rounds ($changed labels changed in the last round)")
+    }
     labels
   }
 }

@@ -61,7 +61,7 @@ object Linker {
     * NULL link_target to a \u0002-escape sentinel, so distinct tuples never
     * collide into one key and null stays distinct from "". 64-bit id
     * collisions are vanishingly rare below ~10^9 distinct surfaces;
-    * [[matchEdges]] checks countDistinct(sid)==count(*) on the same
+    * [[matchEdgesFrom]] checks countDistinct(sid)==count(*) on the same
     * job that computes the IDF corpus size and fails loudly rather
     * than silently merging. */
   def surfaces(mentions: Dataset[Mention]): DataFrame = {
@@ -180,19 +180,8 @@ object Linker {
 
   /** Match edges: cosine ≥ threshold, exact non-NIL link-target
     * equality (the strong EDL signal — reference linkTarget feature),
-    * or person-abbreviation key equality. */
-  def matchEdges(mentions: Dataset[Mention], cfg: Config = Config()): (DataFrame, Dataset[MatchEdge]) = {
-    // checkpoint the fan-out point: surf feeds 4 consumers. Eager
-    // localCheckpoint (not persist) both reuses the data AND truncates
-    // the plan, so downstream actions don't re-optimize the whole
-    // extraction+id-assignment tree each time.
-    val surf = surfaces(mentions).localCheckpoint(true)
-    (surf, matchEdgesFrom(surf, cfg))
-  }
-
-  /** Match edges from a precomputed (checkpointed or snapshot-read)
-    * surface table — resumable-pipeline entry that avoids recomputing
-    * [[surfaces]]. */
+    * or person-abbreviation key equality, over a precomputed
+    * (checkpointed or snapshot-read) [[surfaces]] table. */
   def matchEdgesFrom(surf: DataFrame, cfg: Config = Config()): Dataset[MatchEdge] = {
     val spark = surf.sparkSession
     import spark.implicits._

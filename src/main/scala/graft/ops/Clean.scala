@@ -170,12 +170,6 @@ object Clean {
       .as[Turn]
   }
 
-  /** [[boilerplateTurnNorms]] + [[stripTurnsByNorms]] in one call (the
-    * non-resumable library convenience; graft.Main snapshots the
-    * inventory stage between the two). */
-  def stripBoilerplateTurns(turns: Dataset[Turn], minConvs: Long): Dataset[Turn] =
-    stripTurnsByNorms(turns, boilerplateTurnNorms(turns, minConvs))
-
   /** Within-document exact line dedup (RefinedWeb-style): keep the
     * FIRST occurrence of each normalized line inside a document,
     * drop later repeats. Per-doc window over the line stream — the

@@ -7,13 +7,10 @@ import org.apache.spark.sql.functions._
  * Deduplication operators for training-data pipelines over
  * `documents(doc_id, text)`:
  *
- *  - exact: hash-groupBy keep-min-id (one shuffle on the hash, never
- *    on raw text bytes);
  *  - MinHash + LSH: shingle → K minhashes → B bands → bucket
  *    self-join (candidate pairs only within equal band signatures —
  *    the classic scale path, no O(n²) anywhere);
- *  - SimHash: 64-bit sign-aggregated token-hash fingerprint; near-dup
- *    = small Hamming distance within LSH buckets of bit-chunks;
+ *  - SimHash: 64-bit sign-aggregated token-hash fingerprint;
  *  - n-gram Jaccard: exact verification scoring for candidate pairs;
  *  - embedding cosine near-dup: see Similarity.cosinePairs.
  *
@@ -22,21 +19,12 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /** Exact dedup: canonical doc per normalized-text hash (keep the
-    * minimal doc_id — deterministic). */
-  def exact(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("fp", xxhash64(regexp_replace(lower(col("text")), "\\s+", " ")))
-      .groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-      .select(col("doc_id"), col("fp"), col("n_copies"))
-
   /** Character shingles (default k=5) of the normalized text —
     * sliding window via sequence + substr, pure Column algebra. The
     * exact STRING-set reference formulation: the verify path runs on
     * [[hashedShingles]] (same set sizes w.h.p., ~100× cheaper); this
     * stays as the spec/test comparator. */
-  def shingles(text: Column, k: Int = 5): Column = {
+  private[graft] def shingles(text: Column, k: Int = 5): Column = {
     val norm = regexp_replace(lower(text), "\\s+", " ")
     array_distinct(
       transform(
@@ -277,52 +265,4 @@ object Dedup {
   def simHash(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       call_function("graft_simhash", col("text")).as("simhash"))
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs: block on 4 × 16-bit chunks (any-equal ⇒
-    * candidate, guaranteeing recall for distance ≤ 3 by pigeonhole),
-    * verify with exact Hamming distance.
-    *
-    * Same hot-bucket cap as [[minHashCandidates]]: a 16-bit chunk is
-    * even lower-information than a 2-row minhash band, so boilerplate
-    * corpora make chunk buckets quadratic. Chunks over `maxBucketSize`
-    * star-link within identical FULL simhash groups (distance 0 —
-    * always ≤ maxHamming), preserving exact-duplicate recall at
-    * O(members); a ≤3-distance pair whose every chunk bucket is hot is
-    * traded away, documented loudly here. */
-  def simHashPairs(sims: DataFrame, maxHamming: Int = 3,
-      maxBucketSize: Int = 1024): DataFrame = {
-    // one kernel eval per doc: the 4 chunk branches × 2 join sides scan
-    // this 16-byte-per-row checkpoint, never the upstream simhash plan
-    val compact = sims.select(col("doc_id"), col("simhash"))
-      .filter(col("simhash").isNotNull)
-      .localCheckpoint(true)
-    val chunks = (0 until 4).map { c =>
-      compact.select(col("doc_id"), col("simhash"), lit(c).as("chunk"),
-        shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL).as("key"))
-    }.reduce(_ unionByName _)
-    val sizes = chunks.groupBy(col("chunk"), col("key"))
-      .agg(count(lit(1)).as("bsz"))
-    val sized = chunks.join(sizes.hint("merge"), Seq("chunk", "key"))
-    val small = sized.filter(col("bsz") <= maxBucketSize)
-    val pairsSmall = small.as("a")
-      .join(small.as("b").hint("merge"),
-        col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hamming(col("a.simhash"), col("b.simhash")).as("dist"))
-    val hot = sized.filter(col("bsz") > maxBucketSize)
-    val roots = hot.groupBy(col("chunk"), col("key"), col("simhash"))
-      .agg(min(col("doc_id")).as("root"))
-    val pairsHot = hot
-      .join(roots.hint("merge"), Seq("chunk", "key", "simhash"))
-      .filter(col("doc_id") =!= col("root"))
-      .select(col("root").as("doc_a"), col("doc_id").as("doc_b"),
-        lit(0L).as("dist")) // identical simhash ⇒ distance 0
-    pairsSmall.unionByName(pairsHot)
-      .distinct()
-      .filter(col("dist") <= maxHamming)
-  }
 }

@@ -99,10 +99,6 @@ object SuperEdges {
       .as[SuperEdge]
   }
 
-  /** SuperEdge table over cluster ids. */
-  def superEdges(statements: Dataset[Statement], memberships: Dataset[Membership]): Dataset[SuperEdge] =
-    superEdgesFromResolved(resolvedStatements(statements, memberships))
-
   /** ID-insensitive corpus triples for golden P/R comparison:
     * prototype canonical names instead of cluster ids (cluster ids
     * are content hashes; the reference's are random —

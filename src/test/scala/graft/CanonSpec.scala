@@ -24,7 +24,8 @@ class CanonSpec extends AnyFunSuite {
       m("m1", "Alpha", link = "kb:X"), m("m2", "Alpha", link = "kb:X"),
       m("m3", "Beta", link = "kb:X"), m("m4", "Beta", link = "kb:X"),
       m("m5", "Gamma", link = "kb:X")).toDS()
-    val (surf, edges) = Linker.matchEdges(mentions)
+    val surf = Linker.surfaces(mentions).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf)
     val comp = graft.cc.ConnectedComponents.run(edges.toDF())
     val sc = Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp))
     val protos = Canonicalizer.prototypes(mentions, sc).collect()
@@ -38,7 +39,8 @@ class CanonSpec extends AnyFunSuite {
     val mentions = Seq(
       m("m1", "Unique One"), m("m2", "Wholly Different"),
       m("m3", "Unique One")).toDS()
-    val (surf, edges) = Linker.matchEdges(mentions)
+    val surf = Linker.surfaces(mentions).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf)
     val comp = graft.cc.ConnectedComponents.run(edges.toDF())
     val sc = Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp))
     val protos = Canonicalizer.prototypes(mentions, sc).collect()
@@ -55,14 +57,16 @@ class CanonSpec extends AnyFunSuite {
       Statement(id, s, "Rel", o, 0.9, "c0", 0, 0, 1)
     val mentions = Seq(m("a1", "Foo"), m("a2", "Foo"), m("a3", "Foo"),
       m("b1", "Bar"), m("c1", "Qux")).toDS()
-    val (surf, edges) = Linker.matchEdges(mentions)
+    val surf = Linker.surfaces(mentions).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf)
     val comp = graft.cc.ConnectedComponents.run(edges.toDF())
     val sc = Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp))
     val ms = Canonicalizer.memberships(mentions, sc)
     val stmts = Seq(
       st("s1", "a1", "b1"), st("s2", "a2", "b1"), st("s3", "a3", "b1"),
       st("s4", "a1", "c1")).toDS()
-    val se = SuperEdges.superEdges(stmts, ms).collect()
+    val se = SuperEdges.superEdgesFromResolved(
+      SuperEdges.resolvedStatements(stmts, ms)).collect()
     val byCnt = se.map(e => e.cnt -> e.conf).toMap
     assert(byCnt(3L) == 1.0 - 1.0 / 6.0)
     assert(byCnt(1L) == 0.5)

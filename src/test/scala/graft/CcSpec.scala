@@ -42,4 +42,13 @@ class CcSpec extends AnyFunSuite {
     val b = comps(9L -> 3L, 4L -> 9L, 12L -> 4L)
     assert(a == b)
   }
+
+  test("a run that reaches maxIter unconverged throws instead of returning labels") {
+    import spark.implicits._
+    val edges = (0L until 63L).map(i => i -> (i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](ConnectedComponents.run(edges, maxIter = 1))
+    assert(e.getMessage.contains("maxIter=1"), e.getMessage)
+    assert(e.getMessage.matches("(?s).*\\(\\d+ labels changed in the last round\\).*"),
+      e.getMessage)
+  }
 }

@@ -137,7 +137,8 @@ class CleanSpec extends AnyFunSuite {
       turn("c1", 1, "tell me about scala"),
       turn("c1", 2, "tell me about scala"), // SAME conv twice → df=1, kept
       turn("c2", 1, "unrelated question")).toDS()
-    val out = Clean.stripBoilerplateTurns(turns, minConvs = 3L).collect()
+    val out = Clean.stripTurnsByNorms(turns,
+      Clean.boilerplateTurnNorms(turns, minConvs = 3L)).collect()
     assert(out.length == 3)
     assert(out.forall(t => !t.text.toLowerCase.contains("assistant")))
     // within-conversation repetition alone never strips

@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.canon.{Justifications, RelationClusters}
 import graft.schema.{Membership, Mention, Statement}
-import graft.sources.SideFormats
+import graft.superedge.SuperEdges
 
 class JustificationsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -27,35 +25,16 @@ class JustificationsSpec extends AnyFunSuite {
     assert(ij(("c1", "doc2")) == "m3")
   }
 
-  test("A3 IRI-max variant matches reference SPARQL semantics") {
-    import spark.implicits._
-    val mentions = Seq(m("m1", "doc1", 0.99), m("m9", "doc1", 0.01)).toDS()
-    val ms = Seq(mem("c1", "m1"), mem("c1", "m9")).toDS()
-    val ij = Justifications.informativeJustificationsIriMax(ms, mentions).collect()
-    assert(ij.head.getString(2) == "m9") // max over the id STRING, not conf
-  }
-
   test("A4 cluster links: max cv per (cluster, target), NILs excluded") {
     import spark.implicits._
     val mentions = Seq(
       m("m1", "d", 0.5, "kb:A"), m("m2", "d", 0.9, "kb:A"),
       m("m3", "d", 0.7, "kb:B"), m("m4", "d", 0.99, null)).toDS()
     val ms = Seq("m1", "m2", "m3", "m4").map(mem("c1", _)).toDS()
-    val links = Justifications.clusterLinks(ms, mentions).collect()
+    val links = Justifications.clusterLinksFrom(
+      Justifications.annotatedMembers(ms, mentions)).collect()
       .map(r => r.getString(1) -> r.getDouble(2)).toMap
     assert(links == Map("kb:A" -> 0.9, "kb:B" -> 0.7))
-  }
-
-  test("P9 dummy links are deterministic and unique per mention") {
-    import spark.implicits._
-    val mentions = Seq(m("m1", "d", 0.5), m("m2", "d", 0.5)).toDS().toDF()
-    val d1 = Justifications.withDummyLinks(mentions).collect()
-      .map(_.getAs[String]("link_target"))
-    val d2 = Justifications.withDummyLinks(mentions).collect()
-      .map(_.getAs[String]("link_target"))
-    assert(d1.forall(_.startsWith("DUMMY:")))
-    assert(d1.distinct.length == 2)
-    assert(d1.toSeq == d2.toSeq)
   }
 
   test("relation clustering: identical (pred, arg clusters) merge (§2.4)") {
@@ -68,29 +47,24 @@ class JustificationsSpec extends AnyFunSuite {
       st("s1", "a1", "b1"), st("s2", "a2", "b1"), // same (pred, cA, cB)
       st("s3", "a1", "c1"), // different obj cluster
       st("s4", "a1", "b1", "Other")).toDS() // different pred
-    val rows = RelationClusters.cluster(stmts, ms).collect()
+    // the pipeline's composition: n_members comes from the superedge
+    // aggregate over the shared resolved-statement frame
+    val resolved = SuperEdges.resolvedStatements(stmts, ms)
+    val clusters = RelationClusters.clusterFromResolved(resolved,
+      SuperEdges.superEdgesFromResolved(resolved))
+    val rows = clusters.collect()
     assert(rows.length == 4) // one row per MEMBER statement
     val byCluster = rows.groupBy(_.getString(0))
     assert(byCluster.size == 3)
     val merged = byCluster.values.find(_.map(_.getString(2)).toSet == Set("s1", "s2"))
     assert(merged.isDefined)
     assert(merged.get.forall(_.getLong(3) == 2)) // n_members on every row
-    val summary = RelationClusters.summary(
-      RelationClusters.cluster(stmts, ms)).collect()
+    val summary = RelationClusters.summary(clusters).collect()
     assert(summary.length == 3)
     assert(summary.map(_.getLong(2)).sorted.toSeq == Seq(1L, 1L, 2L))
-
-    // the superedge-count-reuse form (the pipeline path: n_members from
-    // the materialized superedge aggregate, no join-back re-execution)
-    // is row-identical to the standalone form
-    val se = graft.superedge.SuperEdges.superEdges(stmts, ms)
-    val viaSuper = RelationClusters.cluster(stmts, ms, se).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_.toString)
-    val standalone = rows
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(_.toString)
-    assert(viaSuper.toSeq == standalone.toSeq)
+    // the superedge cnt is exactly the member-row count per relation
+    // cluster — the re-aggregation it replaces
+    byCluster.values.foreach(rs => assert(rs.forall(_.getLong(3) == rs.length.toLong)))
   }
 
   test("prototype justification copy-backs carry every member span (proto_justi)") {
@@ -99,13 +73,14 @@ class JustificationsSpec extends AnyFunSuite {
     val ms = Seq(mem("c1", "m1"), mem("c1", "m2")).toDS()
     val protos = Seq(graft.schema.Prototype("p1", "c1", "entity", "X",
       "Person", null, 2L)).toDS()
-    val pj = Justifications.prototypeJustifications(ms, mentions, protos).collect()
+    val annotated = Justifications.annotatedMembers(ms, mentions)
+    val pj = Justifications.prototypeJustificationsFrom(annotated, protos).collect()
     assert(pj.length == 2) // one row per MEMBER, not an argmax
     assert(pj.forall(_.getString(0) == "p1"))
     assert(pj.map(_.getString(2)).toSet == Set("m1", "m2"))
 
-    val pij = Justifications
-      .prototypeInformativeJustifications(ms, mentions, protos).collect()
+    val pij = Justifications.prototypeInformativeJustificationsFrom(
+      Justifications.informativeJustificationsFrom(annotated), protos).collect()
     assert(pij.length == 2) // one per (cluster, doc) — two docs here
     assert(pij.forall(_.getString(0) == "p1"))
 
@@ -121,83 +96,11 @@ class JustificationsSpec extends AnyFunSuite {
       Statement(id, s, "Rel", o, 0.9, "d", 0, 3, 9)
     val ms = Seq(mem("cA", "a1"), mem("cA", "a2"), mem("cB", "b1")).toDS()
     val stmts = Seq(st("s1", "a1", "b1"), st("s2", "a2", "b1")).toDS()
-    val sj = Justifications.superEdgeJustifications(stmts, ms).collect()
+    val sj = Justifications.superEdgeJustificationsFromResolved(
+      SuperEdges.resolvedStatements(stmts, ms)).collect()
     assert(sj.length == 2) // both member statements' justifications kept
     assert(sj.forall(r => r.getString(0) == "cA" && r.getString(2) == "cB"))
     assert(sj.map(_.getString(3)).toSet == Set("s1", "s2"))
     assert(sj.forall(r => r.getInt(6) == 3 && r.getInt(7) == 9))
-  }
-
-  test("modality-typed cluster justifications: per-doc argmax over all five modalities") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("ij").toString + "/ij.csv"
-    val csv = Seq(
-      "entity,just_type,just_doc,just_source,just_confidence_value,so,eo,kfid,ulx,uly,lrx,lry,sid,st,et",
-      "m1,aida:TextJustification,docA,s1,0.9,5,17,,,,,,,,",
-      "m2,aida:TextJustification,docA,s1,0.4,1,2,,,,,,,,",       // loses docA argmax
-      "m1,aida:ImageJustification,docB,s2,0.8,,,,10,20,NaN,40,,,", // NaN bbox → 0
-      "m2,aida:KeyFrameVideoJustification,docC,s3,0.7,,,kf9,1,2,3,4,,,",
-      "m1,aida:ShotVideoJustification,docD,s4,0.6,,,,,,,,shot7,,",
-      "m2,aida:AudioJustification,docE,s5,0.5,,,,,,,,,00:01,00:09")
-    Files.write(java.nio.file.Paths.get(dir), csv.mkString("\n").getBytes)
-    val ij = SideFormats.readInfJustCsv(spark, dir)
-    val ms = Seq(mem("c1", "m1"), mem("c1", "m2")).toDS()
-    val out = Justifications.clusterModalityJustifications(ms, ij).collect()
-    assert(out.length == 5) // one winner per (cluster, doc)
-    val byDoc = out.map(r => r.getAs[String]("just_doc") -> r).toMap
-    assert(byDoc("docA").getAs[String]("entity") == "m1") // conf argmax
-    assert(byDoc("docA").getAs[String]("modality") == "text")
-    assert(byDoc("docA").getAs[Int]("so") == 5)
-    assert(byDoc("docB").getAs[String]("modality") == "image")
-    assert(byDoc("docB").getAs[Int]("lrx") == 0) // NaN→0 (P13)
-    assert(byDoc("docC").getAs[String]("modality") == "keyframe_video")
-    assert(byDoc("docC").getAs[String]("kfid") == "kf9")
-    assert(byDoc("docD").getAs[String]("modality") == "shot_video")
-    assert(byDoc("docD").getAs[String]("sid") == "shot7")
-    assert(byDoc("docE").getAs[String]("modality") == "audio")
-    assert(byDoc("docE").getAs[String]("et") == "00:09")
-  }
-
-  test("json-head export analogs: entity/cluster/event json lines") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("jsonhead").toString
-    // entity.json: [name, type, link]; NIL → deterministic DUMMY
-    val mentions = Seq(m("m1", "d", 0.9, "kb:X"), m("m2", "d", 0.8)).toDS().toDF()
-    SideFormats.writeEntityJson(mentions, s"$base/entity")
-    val ent = spark.read.json(s"$base/entity").collect()
-      .map(r => r.getAs[String]("entity") -> r.getAs[String]("link")).toMap
-    assert(ent("m1") == "kb:X")
-    assert(ent("m2").startsWith("DUMMY:"))
-    // cluster.json: [[members], [prototypes]]
-    val ms = Seq(mem("c1", "m1"), mem("c1", "m2")).toDS()
-    val protos = Seq(("c1", "p1")).toDF("cluster_id", "prototype_id")
-    SideFormats.writeClusterJson(ms, protos, s"$base/cluster")
-    val cl = spark.read.json(s"$base/cluster").collect().head
-    assert(cl.getAs[scala.collection.Seq[String]]("members").toSeq == Seq("m1", "m2"))
-    assert(cl.getAs[scala.collection.Seq[String]]("prototypes").toSeq == Seq("p1"))
-    // event.json: {type, doc, text[], entities[]}
-    val events = Seq(
-      Mention("ev1", "conv1", 0, "event", "Contact.Meet", "met", "met",
-        0, 3, 0.9, null)).toDS().toDF()
-    val args = Seq(("ev1", "Subject", "m1"), ("ev1", "Object", "m2"))
-      .toDF("event_id", "role", "arg_id")
-    SideFormats.writeEventJson(events, args, s"$base/event")
-    val ev = spark.read.json(s"$base/event").collect().head
-    assert(ev.getAs[String]("type") == "Contact.Meet")
-    assert(ev.getAs[String]("doc") == "conv1")
-    assert(ev.getAs[scala.collection.Seq[String]]("text").toSeq == Seq("met"))
-    assert(ev.getAs[scala.collection.Seq[String]]("entities").toSeq == Seq("m1", "m2"))
-  }
-
-  test("jl cluster file round-trip (S8)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("jl").toString + "/clusters.jl"
-    val ms = Seq(mem("c1", "m1"), mem("c1", "m2"), mem("c2", "m3")).toDS()
-    SideFormats.writeClustersJl(ms, dir)
-    val back = SideFormats.readClustersJl(spark, dir)
-    assert(back.count() == 3)
-    val sets = back.collect().groupBy(_.getString(0)).values
-      .map(_.map(_.getString(1)).toSet).toSet
-    assert(sets == Set(Set("m1", "m2"), Set("m3")))
   }
 }

@@ -17,7 +17,8 @@ class LinkerSpec extends AnyFunSuite {
   private def clusters(ms: Seq[Mention]): Set[Set[String]] = {
     import spark.implicits._
     val mentions = ms.toDS()
-    val (surf, edges) = Linker.matchEdges(mentions)
+    val surf = Linker.surfaces(mentions).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf)
     val comp = graft.cc.ConnectedComponents.run(edges.toDF())
     val sc = graft.canon.Canonicalizer.withKind(
       graft.canon.Canonicalizer.surfaceClusters(surf, comp))
@@ -78,7 +79,8 @@ class LinkerSpec extends AnyFunSuite {
     val ms = (0 until 26).map(i => m(s"m$i", s"Common Alias${('a' + i).toChar}x"))
     import spark.implicits._
     val mentions = ms.toDS()
-    val (surf, edges) = Linker.matchEdges(mentions, Linker.Config(maxBlock = 10))
+    val surf = Linker.surfaces(mentions).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf, Linker.Config(maxBlock = 10))
     assert(edges.count() == 0)
   }
 

@@ -14,14 +14,6 @@ class OpsSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
-  test("exact dedup groups identical normalized text") {
-    val d = docs(1L -> "hello  world", 2L -> "hello world", 3L -> "other doc")
-    val out = Dedup.exact(d).collect()
-    assert(out.length == 2)
-    val dup = out.find(_.getLong(2) == 2L).get
-    assert(dup.getLong(0) == 1L) // keeps min doc_id
-  }
-
   test("minhash LSH finds near-duplicates, not unrelated docs") {
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
     val nearDup = base.replace("today", "tonight")
@@ -53,8 +45,6 @@ class OpsSpec extends AnyFunSuite {
     // short docs (few token votes) flip more bits per edit — bound is
     // loose here; real corpora have hundreds of votes per bit
     assert(java.lang.Long.bitCount(sh(1L) ^ sh(3L)) <= 20)
-    val pairs = Dedup.simHashPairs(Dedup.simHash(d), maxHamming = 8).collect()
-    assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
   test("cosine similarity and brute-force top-k") {
@@ -161,23 +151,6 @@ class OpsSpec extends AnyFunSuite {
     // jaccard ~0.3 still collides in some b=8/r=2 band) but cannot
     // survive a 0.95 estimate gate
     assert(!filtered.contains((1L, 3L)) && !filtered.contains((2L, 3L)))
-  }
-
-  test("simhash hot-chunk cap: identical docs still pair at distance 0") {
-    val boiler = "the license header that every document in this corpus " +
-      "shares verbatim across the entire crawl for boilerplate reasons"
-    val rows = (0L until 30L).map(i => i -> s"$boiler tail$i mark$i") :+
-      (99L -> s"$boiler tail0 mark0") // exact copy of doc 0
-    val d = docs(rows: _*)
-    val sims = Dedup.simHash(d)
-    val capped = Dedup.simHashPairs(sims, maxBucketSize = 8).collect()
-    val exact = capped.find(r => r.getLong(0) == 0L && r.getLong(1) == 99L)
-    assert(exact.isDefined && exact.get.getLong(2) == 0L)
-    // verdicts agree with the uncapped run wherever both emit the pair
-    val full = Dedup.simHashPairs(sims).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    capped.foreach(r =>
-      assert(full((r.getLong(0), r.getLong(1))) == r.getLong(2)))
   }
 
   test("cosinePairs (banded multi-probe LSH) has exact recall on planted near-dups") {
@@ -310,11 +283,18 @@ class OpsSpec extends AnyFunSuite {
     assert(out == Map(1L -> "en", 2L -> "de", 3L -> "fr", 4L -> "es"))
   }
 
+  /** Runs a declared query over a one-table `documents` fixture. */
+  private def docsQuery(name: String, d: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("docs").toString
+    d.write.parquet(s"$dir/documents.parquet")
+    graft.SparkEntry.queries(name)(spark, dir)
+  }
+
   test("token counts and quality features") {
     val d = docs(1L -> "Hello, World! This is FINE.")
-    val tc = TextStats.tokenCounts(d).collect().head
+    val tc = docsQuery("q_token_count", d).collect().head
     assert(tc.getInt(1) == 5)
-    val q = TextStats.qualityScore(d).collect().head
+    val q = docsQuery("q_quality", d).collect().head
     assert(q.getInt(1) == 27) // n_chars
     assert(q.getDouble(2) > 0) // punct_ratio
   }
@@ -322,7 +302,7 @@ class OpsSpec extends AnyFunSuite {
   test("fingerprint is whitespace-insensitive") {
     val d = docs(1L -> "a  b\tc", 2L -> "a b c")
     // tabs: regex \s+ normalizes all whitespace runs
-    val fps = TextStats.fingerprints(d).collect().map(_.getLong(1)).toSet
+    val fps = docsQuery("q_fingerprint", d).collect().map(_.getString(1)).toSet
     assert(fps.size == 1)
   }
 

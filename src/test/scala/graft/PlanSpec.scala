@@ -114,9 +114,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!planString(mh).contains("graft_minhash_sig"),
       "minhash kernel re-evaluated inside the banded join")
     assert(planString(mh).contains("ExistingRDD"), "banding does not scan the checkpoint")
-    val sh = graft.ops.Dedup.simHashPairs(graft.ops.Dedup.simHash(d))
-    assert(!planString(sh).contains("graft_simhash"),
-      "simhash kernel re-evaluated inside the chunk join")
     val e = (0 until 16).map(i => (i.toLong, Seq.tabulate(8)(j => (i + j) / 16.0f)))
       .toDF("vec_id", "embedding")
     val cp = graft.ops.Similarity.cosinePairs(e, threshold = 0.5)
@@ -129,7 +126,9 @@ class PlanSpec extends AnyFunSuite {
     val ms = Seq(graft.schema.Membership("c1", "m1", 1.0),
       graft.schema.Membership("c2", "m2", 1.0)).toDS()
     val st = Seq(graft.schema.Statement("s1", "m1", "P", "m2", 0.9, "d", 0, 0, 1)).toDS()
-    val rc = graft.canon.RelationClusters.cluster(st, ms)
+    val resolved = graft.superedge.SuperEdges.resolvedStatements(st, ms)
+    val rc = graft.canon.RelationClusters.clusterFromResolved(resolved,
+      graft.superedge.SuperEdges.superEdgesFromResolved(resolved))
     val plan = rc.queryExecution.executedPlan.toString
     // a window partitioned on rel_key would funnel every member row of a
     // hot relation cluster into ONE task; the two-phase groupBy+join
@@ -144,7 +143,8 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val ms = Seq(graft.schema.Membership("c1", "m1", 1.0)).toDS()
     val st = Seq(graft.schema.Statement("s1", "m1", "P", "m1", 0.9, "d", 0, 0, 1)).toDS()
-    val se = graft.superedge.SuperEdges.superEdges(st, ms)
+    val se = graft.superedge.SuperEdges.superEdgesFromResolved(
+      graft.superedge.SuperEdges.resolvedStatements(st, ms))
     val plan = se.queryExecution.executedPlan.toString
     // two HashAggregates around the exchange = partial + final
     assert("HashAggregate".r.findAllIn(plan).size >= 2, plan)
@@ -163,16 +163,17 @@ class PlanSpec extends AnyFunSuite {
     val st = Seq(graft.schema.Statement("s1", "m1", "P", "m2", 0.9, "d", 0, 0, 1)).toDS()
     val mentions = Seq(graft.schema.Mention(
       "m1", "d", 0, "entity", "Person", "X", "x", 0, 1, 0.9, null)).toDS()
+    val resolved = graft.superedge.SuperEdges.resolvedStatements(st, ms)
     for ((name, df) <- Seq(
-        "superEdges" -> graft.superedge.SuperEdges.superEdges(st, ms).toDF(),
-        "relationClusters" -> graft.canon.RelationClusters.cluster(st, ms),
-        // the pipeline form is fully LAZY (statements⋈memberships² +
-        // the superedge-count join-back all live in ONE plan) — the
-        // no-broadcast doctrine must hold across all of them
-        "relationClustersViaSuperedges" -> graft.canon.RelationClusters.cluster(
-          st, ms, graft.superedge.SuperEdges.superEdges(st, ms)),
+        "superEdges" -> graft.superedge.SuperEdges.superEdgesFromResolved(resolved).toDF(),
+        // over a lazy resolved frame the relation-cluster plan holds
+        // statements⋈memberships² twice plus the superedge-count
+        // join-back — the no-broadcast doctrine must hold across all
+        // of them
+        "relationClusters" -> graft.canon.RelationClusters.clusterFromResolved(
+          resolved, graft.superedge.SuperEdges.superEdgesFromResolved(resolved)),
         "superEdgeJustifications" ->
-          graft.canon.Justifications.superEdgeJustifications(st, ms),
+          graft.canon.Justifications.superEdgeJustificationsFromResolved(resolved),
         "annotatedMembers" ->
           graft.canon.Justifications.annotatedMembers(ms, mentions))) {
       val plan = df.queryExecution.executedPlan.toString

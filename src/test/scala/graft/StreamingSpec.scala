@@ -1,114 +1,14 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.Turn
-import graft.streaming.StreamingExtract
 
-/** Structured-Streaming extraction: the batch kernel under readStream
-  * semantics — incremental appends, watermarked windows, keyed state. */
+/** The engine's streaming face: [[graft.streaming.IncrementalKg]]
+  * maintains the KG snapshots per micro-batch under readStream. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def turn(conv: String, idx: Int, text: String, tsSec: Long): Turn =
-    Turn(conv, idx, "user", text, null, new Timestamp(tsSec * 1000))
-
-  test("stateless streaming extraction appends mentions per micro-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Turn]
-    val q = StreamingExtract.mentions(src.toDS())
-      .writeStream.format("memory").queryName("stream_mentions")
-      .outputMode("append").start()
-    try {
-      src.addData(turn("c1", 0, "John Smith met Maria Garcia in Paris.", 100))
-      q.processAllAvailable()
-      assert(spark.table("stream_mentions").count() == 3)
-      src.addData(turn("c1", 1, "Acme Corp acquired Globex Group.", 160))
-      q.processAllAvailable()
-      assert(spark.table("stream_mentions").count() == 5) // incremental append
-    } finally q.stop()
-  }
-
-  test("windowed mention counts with watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Turn]
-    val q = StreamingExtract
-      .mentionCountsByWindow(src.toDS(), windowLen = "1 minute", watermark = "2 minutes")
-      .writeStream.format("memory").queryName("stream_windows")
-      .outputMode("update").start()
-    try {
-      src.addData(
-        turn("c1", 0, "John Smith met Maria Garcia.", 30),
-        turn("c2", 0, "Ivan Petrov visited Tokyo.", 45))
-      q.processAllAvailable()
-      val rows = spark.table("stream_windows").collect()
-      val byType = rows.map(r => r.getString(1) -> r.getLong(2)).toMap
-      assert(byType(graft.extract.Lexicon.PER) == 3)
-      assert(byType(graft.extract.Lexicon.GPE) == 1)
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup: first-seen turn per fingerprint survives across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Turn]
-    val q = StreamingExtract.dedupTurns(src.toDS(), watermark = "1 hour")
-      .writeStream.format("memory").queryName("stream_dedup")
-      .outputMode("append").start()
-    try {
-      src.addData(
-        turn("c1", 0, "John Smith met Maria Garcia.", 100),
-        turn("c2", 0, "John  Smith met   Maria Garcia.", 110), // ws-variant dup
-        turn("c3", 0, "Ivan Petrov visited Tokyo.", 120))
-      q.processAllAvailable()
-      assert(spark.table("stream_dedup").count() == 2)
-      // a later micro-batch re-ingesting the same text is still dropped
-      src.addData(turn("c4", 0, "John Smith met Maria Garcia.", 200),
-        turn("c5", 0, "Something brand new happened.", 210))
-      q.processAllAvailable()
-      val out = spark.table("stream_dedup").collect().map(_.getString(0)).toSet
-      assert(out == Set("c1", "c3", "c5"), s"got $out")
-    } finally q.stop()
-  }
-
-  test("streaming dedup state is EVICTED past the watermark (bounded store)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Turn]
-    val q = StreamingExtract.dedupTurns(src.toDS(), watermark = "1 hour")
-      .writeStream.format("memory").queryName("stream_dedup_evict")
-      .outputMode("append").start()
-    try {
-      src.addData(turn("c1", 0, "John Smith met Maria Garcia.", 100))
-      q.processAllAvailable()
-      // advance the watermark far past ts=100 + 1h: c1's fingerprint
-      // state must be dropped from the store (the bounded-state
-      // contract — with plain dropDuplicates("fp") this state would
-      // live forever and this re-ingest would be silently deduped)
-      src.addData(turn("c2", 0, "Totally unrelated filler text.", 20000))
-      q.processAllAvailable()
-      src.addData(turn("c3", 0, "John Smith met Maria Garcia.", 20010))
-      q.processAllAvailable()
-      val out = spark.table("stream_dedup_evict").collect().map(_.getString(0)).toSet
-      assert(out == Set("c1", "c2", "c3"),
-        s"expected the past-watermark re-ingest to RE-EMIT (state evicted); got $out")
-    } finally q.stop()
-  }
-
-  test("dedupTurns on a batch frame takes the exact global-dedup branch") {
-    import spark.implicits._
-    val batch = Seq(
-      turn("c1", 0, "John Smith met Maria Garcia.", 100),
-      turn("c2", 0, "john  smith met   maria garcia.", 99999), // ws/case dup, ANY ts
-      turn("c3", 0, "Ivan Petrov visited Tokyo.", 120)).toDS()
-    val out = StreamingExtract.dedupTurns(batch).collect().map(_.conv_id).toSet
-    assert(out.size == 2 && out.contains("c3"))
-  }
 
   test("incremental KG maintenance: two micro-batches ≡ one batch run on the union") {
     import spark.implicits._
@@ -154,27 +54,5 @@ class StreamingSpec extends AnyFunSuite {
       .map(m => (m.cluster_id, m.member_id)).toSet
     assert(streamMembers == batchMembers)
     ref.unpersist()
-  }
-
-  test("per-conversation running state via mapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[Turn]
-    val q = StreamingExtract.conversationProgress(src.toDS())
-      .toDF("conv_id", "n_turns", "max_idx")
-      .writeStream.format("memory").queryName("stream_progress")
-      .outputMode("update").start()
-    try {
-      src.addData(turn("c1", 0, "hello", 10), turn("c1", 1, "world", 20))
-      q.processAllAvailable()
-      src.addData(turn("c1", 2, "again", 30), turn("c2", 0, "new conv", 40))
-      q.processAllAvailable()
-      // update mode: latest row per conv wins
-      val latest = spark.table("stream_progress").collect()
-        .groupBy(_.getString(0)).map { case (k, rs) =>
-          k -> rs.map(r => (r.getLong(1), r.getInt(2))).maxBy(_._1) }
-      assert(latest("c1") == ((3L, 2)))
-      assert(latest("c2") == ((1L, 0)))
-    } finally q.stop()
   }
 }
