@@ -45,11 +45,17 @@ object Main {
         (if (Flags(a(0))) s"${a(0)} needs a value" else s"unknown flag ${a(0)}") + "\n" + Usage)
     }.toMap
 
+  /** Version of the stage output layout. Bump it with any change to a
+    * stage's rows or schema: it is part of every snapshot fingerprint,
+    * so a store never resumes snapshots whose stage output differed. */
+  val LayoutVersion: Int = 1
+
   /** The fingerprint prefix every snapshot stage is keyed under: the
-    * input identity plus the linker config. */
+    * input identity, the linker config and the [[LayoutVersion]]. */
   private[graft] def baseFingerprint(inputId: String, linkCfg: Linker.Config): String =
     s"input=$inputId|threshold=${linkCfg.threshold}" +
-      s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}"
+      s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}" +
+      s"|layout=$LayoutVersion"
 
   def loadTurns(spark: SparkSession, input: String): Dataset[Turn] = {
     import spark.implicits._

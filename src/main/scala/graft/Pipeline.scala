@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -62,7 +62,7 @@ object Pipeline {
       annotatedMembers: DataFrame) {
 
     /** Release EVERY block this run pinned: the lazily-persisted
-      * `annotatedMembers` cache AND all stage-boundary localCheckpoint
+      * `annotatedMembers` cache AND all stage-boundary checkpoint
       * blocks (which `Dataset.unpersist` alone cannot free — see
       * [[graft.util.Blocks]]). Ownership contract: call after the LAST
       * action on ANY result frame; the result is unusable afterwards
@@ -130,30 +130,29 @@ object Pipeline {
     def rows(name: String): Long
   }
 
-  /** Eager localCheckpoint at every boundary, [[run]]'s materializer.
-    * Materialized, not merely cached: persist keeps the full logical
-    * plan, so every downstream action re-analyzes/re-optimizes a tree
-    * that grows with each stage (profiling showed driver planning +
-    * nested encode/decode dominating, not data work). This is the
-    * in-session analog of the snapshot-per-stage design the
-    * reference's step-resumable pipeline implies (SURVEY.md §3.1,
-    * §4.3.5). A stage's row count rides its checkpoint job as an
-    * [[Observation]], so only the stages it checkpoints itself (not
+  /** Eager checkpoint ([[graft.util.Blocks.checkpoint]]) at every
+    * boundary, [[run]]'s materializer. Materialized, not merely cached:
+    * persist keeps the full logical plan, so every downstream action
+    * re-analyzes/re-optimizes a tree that grows with each stage
+    * (profiling showed driver planning + nested encode/decode
+    * dominating, not data work). This is the in-session analog of the
+    * snapshot-per-stage design the reference's step-resumable pipeline
+    * implies (SURVEY.md §3.1, §4.3.5). A stage's row count rides its
+    * checkpoint job, so only the stages it checkpoints itself (not
     * `materialized` ones) have [[rows]]; one instance per run, as it
     * keeps those counts. */
   final class InSession extends Materializer {
-    private val counts = new java.util.concurrent.ConcurrentHashMap[String, Observation]()
+    private val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
     def stage(name: String, materialized: Boolean)(build: => DataFrame): DataFrame =
       if (materialized) build
       else {
-        val obs = Observation()
-        counts.put(name, obs)
-        build.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+        val (cp, n) = graft.util.Blocks.checkpoint(build)
+        counts.put(name, n)
+        cp
       }
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def rows(name: String): Long = Option(counts.get(name))
-      .getOrElse(throw new NoSuchElementException(s"no row count observed for stage $name"))
-      .get("rows").asInstanceOf[Long]
+    def cut(df: DataFrame): DataFrame = graft.util.Blocks.checkpoint(df)._1
+    def rows(name: String): Long = counts.getOrElse(name,
+      throw new NoSuchElementException(s"no row count observed for stage $name"))
   }
 
   /** Every named stage resumes from, or is written as, a

@@ -3,6 +3,8 @@ package graft.cc
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.util.Blocks
+
 /**
  * Connected components over a Dataset edge list via iterative
  * min-label propagation (the GraphFrames-style driver loop called for
@@ -16,15 +18,16 @@ import org.apache.spark.sql.functions._
  * shared informative token), so diameter is small (≤ ~4) regardless of
  * corpus size — label propagation converges in a handful of rounds
  * where star-contraction's worst-case machinery isn't needed. Lineage
- * is truncated every round with an eager localCheckpoint so the plan
+ * is truncated every round with an eager checkpoint so the plan
  * stays O(1) deep; `maxIter` bounds pathological inputs: a run whose
  * last round still changed a label throws instead of returning
  * labels that have not converged.
  *
- * Scale notes: per round, one shuffle join (edges ⋈ labels, both
- * hash-partitioned on the join key and re-usable across rounds) and
- * one min-aggregation. Skewed high-degree vertices are absorbed by
- * partial aggregation of min() before the shuffle.
+ * Scale notes: per round, one join (edges ⋈ labels) into ONE
+ * aggregation per vertex over its neighbors' labels and its own — old
+ * and new label from a single shuffle — then the pointer-jump
+ * self-join. Partial aggregation absorbs high-degree vertices; Catalyst
+ * plans each join from the measured checkpoints (CcSpec forces both).
  *
  * Input:  edges(src: Long, dst: Long), undirected, self-loops ignored.
  * Output: (sid: Long, component: Long) for every vertex appearing in
@@ -40,51 +43,29 @@ object ConnectedComponents {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
-  def run(edges: DataFrame, maxIter: Int = 30,
-      broadcastableVertices: Long = 250000L): DataFrame = {
-    // localCheckpoint (not just persist): persist caches the DATA but
+  def run(edges: DataFrame, maxIter: Int = 30): DataFrame = {
+    // a checkpoint (not just persist): persist caches the DATA but
     // the logical plan — the entire upstream linker DAG — would still
     // be embedded in, and re-planned for, every iteration's job;
     // checkpointing makes each round's plan O(1) regardless of how
     // edges were produced
-    val sym = symmetric(edges).localCheckpoint(true)
-    val vertices = Observation()
-    var labels = sym.select(col("src").as("sid")).distinct()
-      .withColumn("component", col("sid"))
-      .observe(vertices, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // size-gated join strategy (round 6, guide §3.1): the label /
-    // neighbor-min frames are O(vertices); when the graph is small the
-    // per-round joins broadcast the known-small side EXPLICITLY (never
-    // trusting checkpoint-descended size estimates — the
-    // compile-time-broadcast hazard, graft.superedge.SuperEdges) and
-    // each round stops paying two shuffle+sort pairs. A huge graph
-    // (10^8 surfaces at contract scale) takes the identical
-    // pre-round-6 merge-hinted plan. The vertex count rides the labels'
-    // checkpoint job (observe), like each round's `changed` below.
-    val small = vertices.get("n").asInstanceOf[Long] <= broadcastableVertices
-    def bc(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("merge")
+    val sym = Blocks.checkpoint(symmetric(edges))._1
+    var labels = Blocks.checkpoint(sym.select(col("src").as("sid")).distinct()
+      .withColumn("component", col("sid")))._1
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      // neighbor-min, carrying the previous label so convergence is a
-      // free filter on the checkpointed result (no extra shuffle join)
-      val minMsgs = sym
-        // bc(): explicit broadcast under the vertex gate, merge hint
-        // above it — broadcast would OOM at contract scale, and
-        // checkpoint size estimates can't be trusted (see
-        // graft.superedge.SuperEdges)
-        .join(bc(labels), sym("src") === labels("sid"))
-        .groupBy(col("dst"))
-        .agg(min(col("component")).as("mc"))
+      // neighbor-min, carrying the previous label as `old` so
+      // convergence is a free filter on the checkpointed result; sym is
+      // symmetric, so every dst is a labelled vertex
+      val msgs = sym.join(labels, sym("src") === labels("sid"))
+        .select(col("dst").as("sid"), col("component"), lit(null).cast("long").as("self"))
       // checkpoint BEFORE the self-join below: self-joining the raw
       // join+agg subtree trips Catalyst union-constraint rewriting
-      val prop = labels
-        .join(bc(minMsgs), labels("sid") === minMsgs("dst"), "left_outer")
-        .select(labels("sid"), col("component").as("old"),
-          least(col("component"), col("mc")).as("component")) // least skips nulls
-        .localCheckpoint(true)
+      val prop = Blocks.checkpoint(msgs
+        .unionByName(labels.select(col("sid"), col("component"), col("component").as("self")))
+        .groupBy(col("sid"))
+        .agg(max(col("self")).as("old"), min(col("component")).as("component")))._1
       // pointer jumping: l(v) ← l(l(v)) — with the neighbor-min step
       // this converges in O(log n) rounds even on path graphs, not
       // O(diameter)
@@ -94,14 +75,13 @@ object ConnectedComponents {
       // the changed-label count rides the same pass that materializes
       // the round — no third job per round
       val obs = Observation(s"cc_changed_$iter")
-      val next = prop
-        .join(bc(propRight), col("component") === col("y_sid"), "left_outer")
+      val next = Blocks.checkpoint(prop
+        .join(propRight, col("component") === col("y_sid"), "left_outer")
         .select(col("sid"), col("old"),
           coalesce(col("y_component"), col("component")).as("component"))
         .observe(obs, coalesce(sum(
           when(col("old") =!= col("component"), 1L).otherwise(0L)), lit(0L))
-          .as("changed"))
-        .localCheckpoint(true)
+          .as("changed")))._1
       changed = obs.get("changed").asInstanceOf[Long]
       // `next` is materialized (the observe rode its checkpoint job):
       // the round's intermediate `prop` blocks and the PREVIOUS round's
@@ -109,15 +89,15 @@ object ConnectedComponents {
       // O(rounds) copies of the vertex set (Dataset GC frees them
       // eventually, but at scale "eventually" is after the heap
       // pressure already hurt)
-      graft.util.Blocks.release(prop)
-      graft.util.Blocks.release(labels)
+      Blocks.release(prop)
+      Blocks.release(labels)
       labels = next.select(col("sid"), col("component"))
       iter += 1
     }
     // the symmetric edge list served its last round
-    graft.util.Blocks.release(sym)
+    Blocks.release(sym)
     if (changed > 0) {
-      graft.util.Blocks.release(labels)
+      Blocks.release(labels)
       throw new IllegalStateException("connected components did not converge " +
         s"in maxIter=$maxIter rounds ($changed labels changed in the last round)")
     }

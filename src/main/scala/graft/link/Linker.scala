@@ -21,36 +21,16 @@ import graft.schema.{MatchEdge, Mention}
  * magnitude smaller than mentions — never on raw mentions. Blocks are
  * hard-capped (maxBlock) so candidate generation is O(Σ|block|²) with
  * bounded |block|; scoring is a token-level distributed join (no
- * driver-side vocabulary, no broadcast of unbounded state).
+ * driver-side vocabulary). Catalyst plans each join from measured
+ * checkpoint sizes ([[graft.util.Blocks.checkpoint]]) or parquet file
+ * sizes; the edges do not depend on it (LinkerSpec forces sort-merge).
  */
 object Linker {
 
   final case class Config(
       threshold: Double = 0.65,
       maxBlock: Int = 1000,
-      minTokenLen: Int = 2,
-      /** Surface-count gate for the join strategy inside this stage
-        * (round-6, guide §3.1): at or below it every linker-internal
-        * frame (token vectors, doc freqs, norms, block sizes — all
-        * O(nSurf) narrow rows) is genuinely broadcastable, so the
-        * known-small side is broadcast EXPLICITLY — never left to
-        * checkpoint-descended size estimates, which undercount (the
-        * compile-time-broadcast hazard, see graft.superedge.SuperEdges)
-        * — collapsing ~25 merge-hinted shuffle+sorts of tiny frames
-        * into a handful of shuffles. Above it, the always-safe merge
-        * hints pin sort-merge exactly as before: a 100-TB corpus with
-        * 10^8 distinct surfaces takes the identical pre-round-6 plan.
-        * 250k surfaces ≈ ≤1M token rows ≈ tens of MB broadcast. */
-      broadcastableSurfaces: Long = 250000L)
-
-  /** Per-call join-strategy knobs derived from the measured surface
-    * count: `bc(df)` marks a provably-O(nSurf) side broadcast when the
-    * dictionary is small; `mh(df)` applies the merge hint only when it
-    * is huge. */
-  private[link] final case class JoinMode(small: Boolean) {
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df.hint("merge")
-    def mh(df: DataFrame): DataFrame = if (small) df else df.hint("merge")
-  }
+      minTokenLen: Int = 2)
 
   /** Distinct surface forms with a deterministic Long id.
     * Output columns: sid, etype, norm_name, link_target, n_mentions,
@@ -85,7 +65,6 @@ object Linker {
     * gated by the cosine threshold + etype blocking. */
   private[link] def tokenVectors(surf: DataFrame, cfg: Config,
       nSurfaces: Long): DataFrame = {
-    val jm = JoinMode(nSurfaces <= cfg.broadcastableSurfaces)
     val spark = surf.sparkSession
     import spark.implicits._
     val toks = surf
@@ -101,7 +80,7 @@ object Linker {
           .otherwise(concat(lit("i:"), $"tokc")).as("tok"))
       .distinct()
     val df = toks.groupBy($"tok").agg(countDistinct($"sid").as("df"))
-    toks.join(jm.bc(df), "tok")
+    toks.join(df, "tok")
       .withColumn("w", log(lit(1.0) + lit(nSurfaces.toDouble) / $"df"))
       .select($"sid", $"etype", $"tok", $"w")
   }
@@ -110,8 +89,7 @@ object Linker {
     * (etype, informative token) and non-NIL (etype, link_target).
     * Oversized blocks are dropped (cap), bounding join fan-out — the
     * explicit skew defense on hot names (SURVEY.md §7.4.3). */
-  private[link] def candidatePairs(surf: DataFrame, toks: DataFrame, cfg: Config,
-      jm: JoinMode = JoinMode(false)): DataFrame = {
+  private[link] def candidatePairs(surf: DataFrame, toks: DataFrame, cfg: Config): DataFrame = {
     val spark = surf.sparkSession
     import spark.implicits._
     val tokKeys = toks
@@ -122,26 +100,25 @@ object Linker {
     val keys = tokKeys.unionByName(linkKeys)
     val sizes = keys.groupBy($"bkey").agg(count(lit(1)).as("bsz"))
       .filter($"bsz" >= 2 && $"bsz" <= cfg.maxBlock)
-    val kept = keys.join(jm.bc(sizes), "bkey").select($"bkey", $"sid")
-    kept.as("a").join(jm.mh(kept.as("b")), $"a.bkey" === $"b.bkey" && $"a.sid" < $"b.sid")
+    val kept = keys.join(sizes, "bkey").select($"bkey", $"sid")
+    kept.as("a").join(kept.as("b"), $"a.bkey" === $"b.bkey" && $"a.sid" < $"b.sid")
       .select($"a.sid".as("sid1"), $"b.sid".as("sid2"))
       .distinct()
   }
 
   /** TF-IDF cosine over shared tokens, computed as a distributed
     * token join (dot product) against precomputed norms. */
-  private[link] def score(pairs: DataFrame, toks: DataFrame,
-      jm: JoinMode = JoinMode(false)): DataFrame = {
+  private[link] def score(pairs: DataFrame, toks: DataFrame): DataFrame = {
     val norms = toks.groupBy(col("sid")).agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val t1 = toks.select(col("sid").as("sid1"), col("tok"), col("w").as("w1"))
     val t2 = toks.select(col("sid").as("sid2"), col("tok"), col("w").as("w2"))
     pairs
-      .join(jm.bc(t1), "sid1")
-      .join(jm.bc(t2), Seq("sid2", "tok"))
+      .join(t1, "sid1")
+      .join(t2, Seq("sid2", "tok"))
       .groupBy(col("sid1"), col("sid2"))
       .agg(sum(col("w1") * col("w2")).as("dot"))
-      .join(jm.bc(norms.withColumnRenamed("sid", "sid1").withColumnRenamed("nrm", "n1")), "sid1")
-      .join(jm.bc(norms.withColumnRenamed("sid", "sid2").withColumnRenamed("nrm", "n2")), "sid2")
+      .join(norms.withColumnRenamed("sid", "sid1").withColumnRenamed("nrm", "n1"), "sid1")
+      .join(norms.withColumnRenamed("sid", "sid2").withColumnRenamed("nrm", "n2"), "sid2")
       .select(col("sid1"), col("sid2"), (col("dot") / (col("n1") * col("n2"))).as("score"))
   }
 
@@ -149,8 +126,7 @@ object Linker {
     * the abbreviation keys (first-initial | rest-of-name) are equal
     * AND at least one side is actually an initial form — two distinct
     * full first names sharing an initial never merge this way. */
-  private[link] def abbrevPairs(surf: DataFrame,
-      jm: JoinMode = JoinMode(false)): DataFrame = {
+  private[link] def abbrevPairs(surf: DataFrame): DataFrame = {
     val spark = surf.sparkSession
     import spark.implicits._
     val first = regexp_replace(split($"norm_name", " ")(0), "[^a-z0-9]", "")
@@ -173,7 +149,7 @@ object Linker {
       .agg(countDistinct($"fkey").as("nfull"), min($"sid").as("fsid"))
       .filter($"nfull" === 1)
     persons.filter($"isInitial").select($"sid", $"akey")
-      .join(jm.bc(uniqueFulls), "akey")
+      .join(uniqueFulls, "akey")
       .filter($"sid" =!= $"fsid")
       .select(least($"sid", $"fsid").as("sid1"), greatest($"sid", $"fsid").as("sid2"))
   }
@@ -190,9 +166,8 @@ object Linker {
     val (nSurf, nSid) = (sizes.getLong(0), sizes.getLong(1))
     require(nSurf == nSid,
       s"surface id hash collision: $nSurf surfaces, $nSid distinct sids")
-    val jm = JoinMode(nSurf <= cfg.broadcastableSurfaces)
-    val toks = tokenVectors(surf, cfg, nSurf).localCheckpoint(true)
-    val pairs = candidatePairs(surf, toks, cfg, jm)
+    val toks = graft.util.Blocks.checkpoint(tokenVectors(surf, cfg, nSurf))._1
+    val pairs = candidatePairs(surf, toks, cfg)
     // suffix veto: "acme corp" vs "acme group" share a rare stem but
     // denote different organizations — when both names end in a known
     // (already synonym-normalized) org suffix and the suffixes differ,
@@ -203,9 +178,9 @@ object Linker {
       when(last.isin(sufList: _*), last)
     }
     val sufs = surf.select($"sid", sufOf($"norm_name").as("suf"))
-    val scored = score(pairs, toks, jm)
-      .join(jm.bc(sufs.withColumnRenamed("sid", "sid1").withColumnRenamed("suf", "suf1")), "sid1")
-      .join(jm.bc(sufs.withColumnRenamed("sid", "sid2").withColumnRenamed("suf", "suf2")), "sid2")
+    val scored = score(pairs, toks)
+      .join(sufs.withColumnRenamed("sid", "sid1").withColumnRenamed("suf", "suf1"), "sid1")
+      .join(sufs.withColumnRenamed("sid", "sid2").withColumnRenamed("suf", "suf2"), "sid2")
       .filter($"suf1".isNull || $"suf2".isNull || $"suf1" === $"suf2")
     // star edges, not all-pairs: connected components only needs
     // connectivity, so each (etype, link_target) group links every
@@ -219,25 +194,23 @@ object Linker {
         .agg(min($"sid").as("rep"), count(lit(1)).as("gsz"))
         .filter($"gsz" >= 2)
         .drop("gsz")
-      l.join(jm.bc(reps), Seq("etype", "link_target"))
+      l.join(reps, Seq("etype", "link_target"))
         .filter($"sid" =!= $"rep")
         .select(least($"sid", $"rep").as("sid1"),
           greatest($"sid", $"rep").as("sid2"))
     }
-    val edges = scored.filter($"score" >= cfg.threshold)
+    // materialize the (small, surface-scale) edge list so the token-
+    // vector checkpoint — reachable only through this plan — can be
+    // released HERE instead of pinning TF-IDF vectors for the rest of
+    // the session (every caller forces the edge list immediately:
+    // connected components' first round, or the snapshot write)
+    val edges = graft.util.Blocks.checkpoint(scored.filter($"score" >= cfg.threshold)
       .select($"sid1", $"sid2")
       .unionByName(linkPairs)
-      .unionByName(abbrevPairs(surf, jm))
+      .unionByName(abbrevPairs(surf))
       .distinct()
-      .select($"sid1".as("src"), $"sid2".as("dst"))
-      .as[MatchEdge]
-      // materialize the (small, surface-scale) edge list so the token-
-      // vector checkpoint — reachable only through this plan — can be
-      // released HERE instead of pinning TF-IDF vectors for the rest of
-      // the session (every caller forces the edge list immediately:
-      // connected components' first round, or the snapshot write)
-      .localCheckpoint(true)
+      .select($"sid1".as("src"), $"sid2".as("dst")))._1
     graft.util.Blocks.release(toks)
-    edges
+    edges.as[MatchEdge]
   }
 }

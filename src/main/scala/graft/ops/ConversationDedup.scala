@@ -20,7 +20,8 @@ import graft.schema.Turn
  * not corpus-scale — unlike per-cluster aggregates, which can be
  * unbounded); everything after runs on conversation-count rows with
  * LSH-bucketed candidate generation, no all-pairs anywhere. The final
- * filter is a left-semi equi-join on conv_id.
+ * filter is a left-semi equi-join on conv_id. Its document and verdict
+ * frames are measured checkpoints ([[graft.util.Blocks.checkpoint]]).
  */
 object ConversationDedup {
 
@@ -45,7 +46,7 @@ object ConversationDedup {
       jaccardThreshold: Double = 0.9): DataFrame = {
     // checkpoint: the concat feeds the signature kernel, the Jaccard
     // verify, and the id join-back — three consumers
-    val docs = conversationDocs(turns).localCheckpoint(true)
+    val docs = graft.util.Blocks.checkpoint(conversationDocs(turns))._1
     val g = docs.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
     require(g.getLong(0) == g.getLong(1),
       s"conv_id hash collision: ${g.getLong(0)} conversations, ${g.getLong(1)} distinct doc ids")
@@ -62,7 +63,7 @@ object ConversationDedup {
     val lazyVerdicts = Dedup.nearDupClusters(
         docs.select(col("doc_id"), col("text")), jaccardThreshold,
         rowsPerBand = 4, maxBucketSize = 256, minEstimate = 0.5)
-      .join(docs.select(col("doc_id"), col("conv_id")).hint("merge"), "doc_id")
+      .join(docs.select(col("doc_id"), col("conv_id")), "doc_id")
       .select(col("conv_id"), col("doc_id"), col("canon_id"), col("is_dup"))
     // materialize the (tiny: 4 narrow columns × conv count) verdict,
     // then release EVERY block the dedup stack pinned — the
@@ -72,7 +73,7 @@ object ConversationDedup {
     // accumulate pinned conversation-concat blocks for the session.
     // Callers done with the verdict release it via graft.util.Blocks
     // (the snapshot layer does so automatically after a stage write).
-    val verdicts = lazyVerdicts.localCheckpoint(true)
+    val verdicts = graft.util.Blocks.checkpoint(lazyVerdicts)._1
     graft.util.Blocks.releaseAll(Seq(lazyVerdicts, docs))
     verdicts
   }
@@ -83,7 +84,7 @@ object ConversationDedup {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.toDF()
-      .join(clusters.filter(!col("is_dup")).select(col("conv_id")).hint("merge"),
+      .join(clusters.filter(!col("is_dup")).select(col("conv_id")),
         Seq("conv_id"), "left_semi")
       .as[Turn]
   }

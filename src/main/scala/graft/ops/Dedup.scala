@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
  *  - embedding cosine near-dup: see Similarity.cosinePairs.
  *
  * All built-in expressions (transform/aggregate/xxhash64 — codegen'd);
- * the only shuffles are groupBys/joins on compact hash keys.
+ * the only shuffles are groupBys/joins on compact hash keys, planned
+ * from measured checkpoint sizes ([[graft.util.Blocks.checkpoint]]).
  */
 object Dedup {
 
@@ -49,7 +50,7 @@ object Dedup {
 
   /** LSH banding: near-dup candidate pairs = docs sharing ≥1 band of
     * `rowsPerBand` consecutive minhashes. Bucket join on the band
-    * hash — distributed, no broadcast, no n². `numHashes` must match
+    * hash — distributed, no n². `numHashes` must match
     * the signature width (and divide by rowsPerBand) — enforced, not
     * assumed, so a desync can't silently degenerate empty band slices
     * into one global all-pairs bucket.
@@ -91,10 +92,9 @@ object Dedup {
     // computed ONCE here and stored (8 B/row) rather than inside each of
     // the B band branches, which would stringify+hash the 16-element
     // signature B× per doc on every scan of the checkpoint
-    val compact = guarded.select(col("doc_id"), col("signature"),
+    val compact = graft.util.Blocks.checkpoint(guarded.select(col("doc_id"), col("signature"),
         xxhash64(col("signature").cast("array<string>").cast("string"))
-          .as("sigh"))
-      .localCheckpoint(true)
+          .as("sigh")))._1
     val bands = (0 until numHashes / rowsPerBand).map { b =>
       compact.select(
         col("doc_id"),
@@ -120,10 +120,10 @@ object Dedup {
     // non-boilerplate pairs live.
     val sizes = bands.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("bsz"))
-    val sized = bands.join(sizes.hint("merge"), Seq("band", "bucket"))
+    val sized = bands.join(sizes, Seq("band", "bucket"))
     val small = sized.filter(col("bsz") <= maxBucketSize)
     val pairsSmall = small.as("a")
-      .join(small.as("b").hint("merge"),
+      .join(small.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -131,7 +131,7 @@ object Dedup {
     val roots = hot.groupBy(col("band"), col("bucket"), col("sigh"))
       .agg(min(col("doc_id")).as("root"))
     val pairsHot = hot
-      .join(roots.hint("merge"), Seq("band", "bucket", "sigh"))
+      .join(roots, Seq("band", "bucket", "sigh"))
       .filter(col("doc_id") =!= col("root")) // root = min ⇒ doc_a < doc_b
       .select(col("root").as("doc_a"), col("doc_id").as("doc_b"))
     val pairs = pairsSmall.unionByName(pairsHot).distinct()
@@ -158,10 +158,8 @@ object Dedup {
         zip_with(col("sa"), col("sb"), (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v)
       pairs
-        .join(compact.select(col("doc_id").as("doc_a"), col("signature").as("sa"))
-          .hint("merge"), "doc_a")
-        .join(compact.select(col("doc_id").as("doc_b"), col("signature").as("sb"))
-          .hint("merge"), "doc_b")
+        .join(compact.select(col("doc_id").as("doc_a"), col("signature").as("sa")), "doc_a")
+        .join(compact.select(col("doc_id").as("doc_b"), col("signature").as("sb")), "doc_b")
         .filter(matches.cast("double") >= lit(minEstimate * numHashes))
         .select(col("doc_a"), col("doc_b"))
     }
@@ -191,7 +189,7 @@ object Dedup {
     // `docs` leaves stay: the caller's frame feeds the join-back below.
     graft.util.Blocks.releaseExcept(verified, Seq(docs))
     docs.select(col("doc_id"))
-      .join(comp.withColumnRenamed("sid", "doc_id").hint("merge"), Seq("doc_id"), "left_outer")
+      .join(comp.withColumnRenamed("sid", "doc_id"), Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("canon_id"))
       .withColumn("is_dup", col("doc_id") =!= col("canon_id"))
@@ -243,16 +241,16 @@ object Dedup {
           size(hashedShingles(col("text"), k)).as("n_sh"))
         pairs
           .join(counts.withColumnRenamed("doc_id", "doc_a")
-            .withColumnRenamed("n_sh", "n_a").hint("merge"), "doc_a")
+            .withColumnRenamed("n_sh", "n_a"), "doc_a")
           .join(counts.withColumnRenamed("doc_id", "doc_b")
-            .withColumnRenamed("n_sh", "n_b").hint("merge"), "doc_b")
+            .withColumnRenamed("n_sh", "n_b"), "doc_b")
           .filter(least(col("n_a"), col("n_b")).cast("double") >=
             lit(minJaccard) * greatest(col("n_a"), col("n_b")))
           .select(col("doc_a"), col("doc_b"))
       }
     pre
-      .join(shingled.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a").hint("merge"), "doc_a")
-      .join(shingled.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b").hint("merge"), "doc_b")
+      .join(shingled.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
+      .join(shingled.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         call_function("graft_jaccard64", col("sh_a"), col("sh_b")).as("jaccard"))
   }

@@ -55,34 +55,31 @@ object Similarity {
     * back only for the (candidate-sized) verification stage. Per-band
     * candidate cost is Σ_bucket |bucket|², so bucket POPULATION, not
     * n, bounds the quadratic term — which is why `nBits` defaults to
-    * AUTO (`nBits = 0`): one cheap `count()` sizes it as
-    * log2(n / targetBucketSize) clamped to [8, 24], so a caller
-    * feeding 10⁹ vectors without reading this doc gets ~22-bit buckets
-    * (≈256 rows each) instead of 8-bit buckets holding 4M rows apiece
-    * (an accidental all-pairs). Pass an explicit `nBits` to skip the
-    * count action. More bits per band lowers per-band collision
-    * probability; recall is restored by the band count and
-    * multi-probing, and the planted-dup miss bound in the oracle holds
-    * at any nBits ≥ 8 (p^nBits terms only sharpen the S-curve). */
+    * AUTO (`nBits = 0`): the embedding checkpoint's row count (no
+    * extra job) sizes it as log2(n / targetBucketSize) clamped to
+    * [8, 24], so a caller feeding 10⁹ vectors without reading this doc
+    * gets ~22-bit buckets (≈256 rows each) instead of 8-bit buckets
+    * holding 4M rows apiece (an accidental all-pairs). More bits per
+    * band lowers per-band collision probability; recall is restored
+    * by the band count and multi-probing, and the planted-dup miss
+    * bound in the oracle holds at any nBits ≥ 8 (p^nBits terms only
+    * sharpen the S-curve). */
   def cosinePairs(embeddings: DataFrame, threshold: Double = 0.95,
       nBits: Int = 0, nBands: Int = 6, probeHamming: Int = 1,
       seed: Int = 42): DataFrame = {
     // materialize the caller's upstream plan exactly ONCE before
-    // anything else: the auto-nBits count() below would otherwise
-    // execute an expensive un-materialized embedding frame a second
-    // full time (count, then checkpoint)
-    val raw = embeddings.select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
-    val bits = if (nBits > 0) nBits else autoBits(raw.count())
+    // anything else; the auto-nBits row count rides that job
+    val (raw, n) = graft.util.Blocks.checkpoint(
+      embeddings.select(col("vec_id"), col("embedding")))
+    val bits = if (nBits > 0) nBits else autoBits(n)
     // one kernel eval per (vector, band): the slim exploded
     // (vec_id, band, bucket) longs are checkpointed once; both join
     // sides scan the materialized longs, never the kernels, and the
     // verify stage joins embeddings back from `raw`
-    val slim = raw.select(col("vec_id"),
+    val slim = graft.util.Blocks.checkpoint(raw.select(col("vec_id"),
         posexplode(array((0 until nBands).map(bd =>
           call_function("graft_lsh_bucket", col("embedding"), lit(bits),
-            lit(seed + bd * 7919))): _*)).as(Seq("band", "bucket")))
-      .localCheckpoint(true)
+            lit(seed + bd * 7919))): _*)).as(Seq("band", "bucket"))))._1
     // multi-probe one side only: pair (a,b) collides iff
     // Hamming(bucket_a, bucket_b) ≤ h in some band — XOR-flipping side
     // a's bucket by every ≤h mask covers exactly that set
@@ -94,15 +91,14 @@ object Similarity {
     val probed = slim.select(col("vec_id"), col("band"),
       explode(array(masks.map(m =>
         col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val candPairs = probed.as("a").join(slim.as("b").hint("merge"),
+    val candPairs = probed.as("a").join(slim.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
-    val emb = raw
     candPairs
-      .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")).hint("merge"), "vec_a")
-      .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")).hint("merge"), "vec_b")
+      .join(raw.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
+      .join(raw.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         round(cosine(col("emb_a"), col("emb_b")), 6).as("sim"))
       .filter(col("sim") >= threshold)

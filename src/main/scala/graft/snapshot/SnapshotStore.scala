@@ -67,7 +67,7 @@ class SnapshotStore(val root: String) {
     // wall_ms covers forcing the stage's computation: the parquet write
     // (the action that executes the returned plan) PLUS the builder's
     // own wall (`builderWallMs`, timed by getOrCreate) — builders that
-    // run eager actions (localCheckpoints, guard counts: the dedup
+    // run eager actions (checkpoints, guard counts: the dedup
     // stage does most of its work there) would otherwise be invisible
     // and the manifest's per-stage profile would under-credit them
     // (observed: a 20M-turn dedup_canon stage credited 10.7 s of a
@@ -157,7 +157,7 @@ class SnapshotStore(val root: String) {
         write(stage, df, fingerprint,
           builderWallMs = (System.nanoTime() - t0) / 1000000L)
         // the builder frame is DEAD after the write (all consumers read
-        // the parquet snapshot back) — release any localCheckpoint
+        // the parquet snapshot back) — release any checkpoint
         // blocks its plan pinned, or a long session running many stages
         // accumulates them (Dataset GC alone never frees them; see
         // graft.util.Blocks). Builders must not return frames sharing

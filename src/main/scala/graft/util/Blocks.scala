@@ -1,11 +1,16 @@
 package graft.util
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftDatasets, Observation, classic}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
 
 /**
- * Block-level lifecycle helpers for `localCheckpoint`ed frames.
+ * The engine's one checkpoint operator, and block-level lifecycle
+ * helpers for the frames it returns.
  *
  * `Dataset.localCheckpoint` pins its materialized partitions via
  * `RDD.persist`, and `Dataset.unpersist` does NOT release them (it
@@ -24,7 +29,38 @@ import org.apache.spark.sql.execution.LogicalRDD
  */
 object Blocks {
 
-  /** The RDDs pinned by localCheckpoint scans in this frame's plan. */
+  /** Eager `localCheckpoint` of `df`, and its row count. Spark's leaf
+    * reports the PRE-checkpoint size estimate, which an `explode` or a
+    * join leaves orders of magnitude off; this one reports the measured
+    * row count and, as size, the count × `EstimationUtils.getSizePerRow`
+    * of the fixed-width columns plus the measured bytes of the string,
+    * binary and array columns (default sizes undercount a shingle array
+    * ~1000×). Both ride the checkpoint's job as an [[Observation]], and
+    * Catalyst plans every join over the result from them. */
+  def checkpoint(df: DataFrame): (DataFrame, Long) = {
+    val perCol = df.schema.fields.toSeq.map(f => width(col(s"`${f.name}`"), f.dataType))
+    val obs = Observation()
+    val cp = df.observe(obs, count(lit(1)).as("rows"),
+      coalesce(sum(perCol.flatten.foldLeft(lit(0L))(_ + _)), lit(0L)).as("bytes"))
+      .localCheckpoint(true)
+    val m = obs.get
+    val n = m("rows").asInstanceOf[Long]
+    val lr = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val fixed = lr.output.zip(perCol).collect { case (a, None) => a }
+    val stats = Statistics(BigInt(n) * EstimationUtils.getSizePerRow(fixed) +
+      m("bytes").asInstanceOf[Long], rowCount = Some(BigInt(n)))
+    val session = cp.sparkSession.asInstanceOf[classic.SparkSession]
+    (GraftDatasets.ofRows(session, lr.copy()(session, Some(stats), Some(lr.constraints))), n)
+  }
+
+  /** Bytes of a variable-width value; None where the default size is exact. */
+  private def width(c: Column, t: DataType): Option[Column] = t match {
+    case _: StringType | BinaryType => Some(greatest(octet_length(c), lit(0)))
+    case ArrayType(e, _) => Some(greatest(size(c), lit(0)) * e.defaultSize)
+    case _ => None
+  }
+
+  /** The RDDs pinned by checkpoint scans in this frame's plan. */
   def pinned(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 

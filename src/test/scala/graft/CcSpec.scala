@@ -51,4 +51,13 @@ class CcSpec extends AnyFunSuite {
     assert(e.getMessage.matches("(?s).*\\(\\d+ labels changed in the last round\\).*"),
       e.getMessage)
   }
+
+  test("labels are the same whether Catalyst broadcasts or sort-merges the rounds") {
+    // a seeded random graph: many components of mixed depth
+    val rnd = new scala.util.Random(11)
+    val edges = Seq.fill(1500)(rnd.nextInt(2000).toLong -> rnd.nextInt(2000).toLong)
+    val dflt = comps(edges: _*)
+    assert(dflt.values.toSet.size > 1)
+    assert(TestSpark.withoutBroadcast(comps(edges: _*)) == dflt)
+  }
 }

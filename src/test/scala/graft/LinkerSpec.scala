@@ -93,4 +93,16 @@ class LinkerSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(s1 == s2)
   }
+
+  test("edges are the same whether Catalyst broadcasts or sort-merges") {
+    import spark.implicits._
+    val turns = graft.synth.TranscriptSynth.turnsDs(spark,
+      graft.synth.TranscriptSynth.Config(nConvs = 40, turnsPerConv = 6))
+    val mentions = graft.extract.MentionExtractor.extract(turns).flatMap(_.mentions)
+    val surf = graft.util.Blocks.checkpoint(Linker.surfaces(mentions))._1
+    def edges() = Linker.matchEdgesFrom(surf).collect().toSet
+    val dflt = edges()
+    assert(dflt.nonEmpty)
+    assert(TestSpark.withoutBroadcast(edges()) == dflt)
+  }
 }

@@ -153,6 +153,23 @@ class OpsSpec extends AnyFunSuite {
     assert(!filtered.contains((1L, 3L)) && !filtered.contains((2L, 3L)))
   }
 
+  test("near-dup verdicts are the same whether Catalyst broadcasts or sort-merges") {
+    // near-dup pairs, exact re-ingests, and a shared banner that makes
+    // hot buckets under the cap below: every join path of the stack runs
+    val boiler = "this conversation is provided under the standard license terms"
+    val rows = (0L until 30L).flatMap { i =>
+      val t = s"$boiler topic$i alpha$i beta$i gamma$i delta$i epsilon$i zeta$i"
+      Seq(i -> t) ++ (if (i % 3 == 0) Seq((100 + i) -> t.replace(s"beta$i", s"btea$i"))
+        else if (i % 3 == 1) Seq((100 + i) -> t) else Nil)
+    }
+    def verdicts() = Dedup.nearDupClusters(docs(rows: _*), jaccardThreshold = 0.8,
+        rowsPerBand = 4, maxBucketSize = 8, minEstimate = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val dflt = verdicts()
+    assert(dflt.count(_._3) >= 10)
+    assert(TestSpark.withoutBroadcast(verdicts()) == dflt)
+  }
+
   test("cosinePairs (banded multi-probe LSH) has exact recall on planted near-dups") {
     import spark.implicits._
     // deterministic pseudo-random corpus + a perturbed near-duplicate of

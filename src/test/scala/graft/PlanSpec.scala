@@ -183,6 +183,38 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("a measured checkpoint reports its true row count to Catalyst") {
+    val df = spark.range(1).select(explode(sequence(lit(1L), lit(5000L))).as("v"))
+    val (cp, n) = graft.util.Blocks.checkpoint(df)
+    assert(n == 5000L)
+    assert(cp.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(5000)))
+    assert(cp.count() == 5000L)
+    graft.util.Blocks.release(cp)
+  }
+
+  test("measured checkpoints plan joins from their true size, not the pre-checkpoint estimate") {
+    def selfJoin(df: org.apache.spark.sql.DataFrame): String =
+      planString(df.as("a").join(df.as("b"), col("a.k") === col("b.k")))
+    // explode(sequence(...)) is estimated at the size of its one input
+    // row; 1M long rows are 16 MB, above the 10 MB broadcast threshold
+    def exploded(n: Long) = spark.range(1).select(explode(sequence(lit(1L), lit(n))).as("k"))
+    val raw = exploded(1000000L).localCheckpoint(true)
+    assert(selfJoin(raw).contains("BroadcastHashJoin"),
+      "the undercount this guards against no longer shows on a plain checkpoint")
+    val (big, _) = graft.util.Blocks.checkpoint(exploded(1000000L))
+    val bigPlan = selfJoin(big)
+    assert(bigPlan.contains("SortMergeJoin") && !bigPlan.contains("BroadcastHashJoin"), bigPlan)
+    val (small, _) = graft.util.Blocks.checkpoint(exploded(1000L))
+    assert(selfJoin(small).contains("BroadcastHashJoin"), selfJoin(small))
+    // variable-width columns count at their measured width: 2,000 rows
+    // of 1,000-long arrays are 16 MB, where default sizes say 48 kB
+    val (wide, _) = graft.util.Blocks.checkpoint(
+      spark.range(2000).select(col("id").as("k"), sequence(lit(1L), lit(1000L)).as("arr")))
+    val widePlan = selfJoin(wide)
+    assert(widePlan.contains("SortMergeJoin") && !widePlan.contains("BroadcastHashJoin"), widePlan)
+    graft.util.Blocks.releaseAll(Seq(raw, big, small, wide))
+  }
+
   test("cleaning ops: per-row passes plan no shuffle; strip has no window") {
     import spark.implicits._
     val docs = Seq((1L, "a b a"), (2L, "c\nd")).toDF("doc_id", "text")

@@ -202,4 +202,23 @@ class SnapshotSpec extends AnyFunSuite {
     assert(jobs.size == 1, jobs.asScala.mkString("\n"))
     assert(manifestCounts(store, "w") == (100L -> (0 until 4).map(_ -> 25L)))
   }
+
+  test("a layout-version bump recomputes every stage; a same-version resume writes nothing") {
+    val turns = graft.synth.TranscriptSynth.turnsDs(spark,
+      graft.synth.TranscriptSynth.Config(nConvs = 20, turnsPerConv = 4), partitions = 2)
+    val root = Files.createTempDirectory("kglayout").toString
+    val store = new SnapshotStore(root)
+    val layout = s"|layout=${Main.LayoutVersion}"
+    Main.runResumable(spark, turns, store)
+    val written = store.manifestEntries().size
+    assert(store.manifestEntries().forall(_.contains(layout)))
+    // the store as the previous layout version left it
+    val manifest = java.nio.file.Paths.get(root, "manifest.json")
+    Files.write(manifest, new String(Files.readAllBytes(manifest), "UTF-8")
+      .replace(layout, s"|layout=${Main.LayoutVersion - 1}").getBytes("UTF-8"))
+    Main.runResumable(spark, turns, store)
+    assert(store.manifestEntries().size == 2 * written)
+    Main.runResumable(spark, turns, store)
+    assert(store.manifestEntries().size == 2 * written)
+  }
 }
