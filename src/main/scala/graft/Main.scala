@@ -48,7 +48,7 @@ object Main {
   /** Version of the stage output layout. Bump it with any change to a
     * stage's rows or schema: it is part of every snapshot fingerprint,
     * so a store never resumes snapshots whose stage output differed. */
-  val LayoutVersion: Int = 1
+  val LayoutVersion: Int = 2
 
   /** The fingerprint prefix every snapshot stage is keyed under: the
     * input identity, the linker config and the [[LayoutVersion]]. */

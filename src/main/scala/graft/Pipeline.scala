@@ -235,11 +235,12 @@ object Pipeline {
     // §2.6 — Spark happily runs concurrent jobs; the serial ordering
     // was only ever our driver code): memberships → resolved
     // statements → superedges on one thread, prototypes on the other.
-    // prototypes threads the SAME dictFits gate as memberships: an
-    // unconditional broadcast hint would force an oversized dictionary
-    // past the broadcast limit where un-hinted Catalyst falls back to
-    // a shuffle join (which AQE then skew-splits; the downstream
-    // groupBy's partial agg absorbs the hot surface either way).
+    // prototypes takes the dictFits gate that picks the membership
+    // path: an unconditional broadcast hint would force an oversized
+    // dictionary past the broadcast limit where un-hinted Catalyst
+    // falls back to a shuffle join (which AQE then skew-splits; the
+    // downstream groupBy's partial agg absorbs the hot surface either
+    // way).
     val (memberships, resolvedStmts, superEdges, superEdgesFit, prototypes) = {
       val fMem = Future(m.stage("memberships") {
         (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -378,18 +378,12 @@ object SparkEntry {
       // gate: the golden-spec bar (frame P/R ≥ 0.9 on KgEventsCfg, the
       // corpus the spec itself runs) pinned as oracle literals
       import s.implicits._
-      val r = Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))
-      val frames = EventCoref
-        .namedFrames(r.eventClusters, r.eventArgs, r.memberships, r.prototypes)
-        .select(col("etype"), col("subj"), col("obj"), col("place"),
-          col("participants")).as("t")
+      val frames = namedEventFrames(
+        Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))).as("t")
       val g = goldenEventFramesDf(s).as("g")
       val emitted = frames.count()
       val golden = g.count()
-      val matched = frames.join(g,
-        col("t.etype") === col("g.etype") && col("t.subj") === col("g.subj") &&
-          col("t.obj") === col("g.obj") && (col("t.place") <=> col("g.place")) &&
-          (col("t.participants") <=> col("g.participants"))).count()
+      val matched = frames.join(g, sameEventFrame).count()
       Seq((golden, matched * 10L >= emitted * 9L, matched * 10L >= golden * 9L))
         .toDF("golden_total", "precision_ok", "recall_ok")
     }),
@@ -398,19 +392,7 @@ object SparkEntry {
       // per-cluster member counts on every matched triple — the
       // PipelineGoldenSpec relation assertions, driver-gated
       import s.implicits._
-      val r = Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))
-      val names = r.prototypes.toDF().select(col("cluster_id"), col("name"))
-      val rel = RelationClusters.summary(r.relationClusters)
-        .select(
-          split(col("rel_key"), "\\|").getItem(0).as("pred"),
-          regexp_extract(col("rel_key"), "obj:([^,]+)", 1).as("obj_cluster"),
-          regexp_extract(col("rel_key"), "subj:([^,]+)$", 1).as("subj_cluster"),
-          col("n_members"))
-        .join(names.select(col("cluster_id").as("subj_cluster"),
-          col("name").as("subj")), Seq("subj_cluster"))
-        .join(names.select(col("cluster_id").as("obj_cluster"),
-          col("name").as("obj")), Seq("obj_cluster"))
-        .select(col("subj"), col("pred"), col("obj"), col("n_members"))
+      val rel = namedRelations(Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8)))
       val g = goldenRelationCountsDf(s)
       val golden = g.count()
       val m = rel.join(g, Seq("subj", "pred", "obj"))
@@ -437,49 +419,25 @@ object SparkEntry {
           coalesce(col("ing"), lit(false)).as("in_golden"))
     }),
     "q_kg_relations_golden" -> ((s, _) => { // relation-cluster twin:
-      // parse the injective rel_key ("<pred>|obj:c:<md5>,subj:c:<md5>"
-      // — the sorted link set always orders obj before subj), resolve
-      // cluster ids to prototype names, and full-outer the name-level
-      // (subj, pred, obj, n_members) clusters against the planted fact
-      // multiplicities. The DuckDB oracle re-derives the same join from
-      // the q_kg_relation_clusters + q_kg_prototypes dumps.
-      val r = Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))
-      val names = r.prototypes.toDF().select(col("cluster_id"), col("name"))
-      val rel = RelationClusters.summary(r.relationClusters)
-        .select(
-          split(col("rel_key"), "\\|").getItem(0).as("pred"),
-          regexp_extract(col("rel_key"), "obj:([^,]+)", 1).as("obj_cluster"),
-          regexp_extract(col("rel_key"), "subj:([^,]+)$", 1).as("subj_cluster"),
-          col("n_members"))
-        .join(names.select(col("cluster_id").as("subj_cluster"), col("name").as("subj")),
-          Seq("subj_cluster"))
-        .join(names.select(col("cluster_id").as("obj_cluster"), col("name").as("obj")),
-          Seq("obj_cluster"))
-        .select(col("subj"), col("pred"), col("obj"), col("n_members"))
+      // full-outer the name-level (subj, pred, obj, n_members) clusters
+      // ([[namedRelations]]) against the planted fact multiplicities.
+      // The DuckDB oracle re-derives the same join from the
+      // q_kg_relation_clusters + q_kg_prototypes dumps.
+      val rel = namedRelations(Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8)))
       rel.join(goldenRelationCountsDf(s), Seq("subj", "pred", "obj"), "full_outer")
         .select(col("subj"), col("pred"), col("obj"),
           col("n_members"), col("golden_n"))
     }),
     "q_kg_event_prototypes" -> ((s, _) => { // C8: event coreference output
-      val r = Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))
-      EventCoref.namedFrames(r.eventClusters, r.eventArgs, r.memberships, r.prototypes)
-        .select(col("etype"), col("subj"), col("obj"), col("place"),
-          col("participants"), col("n_members"))
+      namedEventFrames(Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8)))
     }),
     "q_kg_events_golden" -> ((s, _) => { // event twin of q_kg_triples_golden:
       // full-outer verdict of pipeline event frames vs planted truth,
       // null-safe on the optional place/participants key columns
-      val r = Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))
-      val frames = EventCoref
-        .namedFrames(r.eventClusters, r.eventArgs, r.memberships, r.prototypes)
-        .select(col("etype"), col("subj"), col("obj"), col("place"),
-          col("participants"), col("n_members")).as("t")
+      val frames = namedEventFrames(
+        Pipeline.run(TranscriptSynth.turnsDs(s, KgEventsCfg, partitions = 8))).as("t")
       val g = goldenEventFramesDf(s).as("g")
-      frames.join(g,
-          col("t.etype") === col("g.etype") && col("t.subj") === col("g.subj") &&
-            col("t.obj") === col("g.obj") &&
-            (col("t.place") <=> col("g.place")) &&
-            (col("t.participants") <=> col("g.participants")), "full_outer")
+      frames.join(g, sameEventFrame, "full_outer")
         .select(
           coalesce(col("t.etype"), col("g.etype")).as("etype"),
           coalesce(col("t.subj"), col("g.subj")).as("subj"),
@@ -496,10 +454,40 @@ object SparkEntry {
     })
   )
 
-  /** Deterministic Statement/Membership tables over `events` — the
-    * DuckDB-replicable harness for the cluster-op oracle queries:
-    * each event row is a "statement" (subj = user, obj = the JSON k
-    * payload), memberships assign both ends to mod-50 buckets. */
+  /** A run's relation clusters at name level: (subj, pred, obj,
+    * n_members), parsed from the injective rel_key
+    * ("<pred>|obj:c:<md5>,subj:c:<md5>" — the sorted link set always
+    * orders obj before subj) with cluster ids resolved to prototype
+    * names. */
+  private def namedRelations(r: Pipeline.Result): DataFrame = {
+    val names = r.prototypes.toDF().select(col("cluster_id"), col("name"))
+    RelationClusters.summary(r.relationClusters)
+      .select(
+        split(col("rel_key"), "\\|").getItem(0).as("pred"),
+        regexp_extract(col("rel_key"), "obj:([^,]+)", 1).as("obj_cluster"),
+        regexp_extract(col("rel_key"), "subj:([^,]+)$", 1).as("subj_cluster"),
+        col("n_members"))
+      .join(names.select(col("cluster_id").as("subj_cluster"), col("name").as("subj")),
+        Seq("subj_cluster"))
+      .join(names.select(col("cluster_id").as("obj_cluster"), col("name").as("obj")),
+        Seq("obj_cluster"))
+      .select(col("subj"), col("pred"), col("obj"), col("n_members"))
+  }
+
+  /** A run's named event frames: (etype, subj, obj, place,
+    * participants, n_members). */
+  private def namedEventFrames(r: Pipeline.Result): DataFrame =
+    EventCoref.namedFrames(r.eventClusters, r.eventArgs, r.memberships, r.prototypes)
+      .select(col("etype"), col("subj"), col("obj"), col("place"),
+        col("participants"), col("n_members"))
+
+  /** Event-frame equality between frames aliased `t` and `g`, null-safe
+    * on the optional place/participants columns. */
+  private def sameEventFrame: Column =
+    col("t.etype") === col("g.etype") && col("t.subj") === col("g.subj") &&
+      col("t.obj") === col("g.obj") && (col("t.place") <=> col("g.place")) &&
+      (col("t.participants") <=> col("g.participants"))
+
   /** Deterministic "dirty" corpus for the boilerplate rows: a shared
     * header line spliced into the MIDDLE of every doc (so the rebuild
     * must preserve the order of the two real halves around it) and a
@@ -531,6 +519,10 @@ object SparkEntry {
       expr("substring(text, 31)"), lit("\n"),
       substring(col("text"), 1, 30)).as("text"))
 
+  /** Deterministic Statement/Membership tables over `events` — the
+    * DuckDB-replicable harness for the cluster-op oracle queries:
+    * each event row is a "statement" (subj = user, obj = the JSON k
+    * payload), memberships assign both ends to mod-50 buckets. */
   private def fabricatedStatements(s: SparkSession, d: String): (Dataset[Statement], Dataset[Membership]) = {
     import s.implicits._
     // defensively drop NULL-keyed payload rows on BOTH the Spark

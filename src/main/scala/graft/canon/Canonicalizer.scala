@@ -1,8 +1,9 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.link.Linker
 import graft.schema.{Membership, Mention, Prototype}
 
 /**
@@ -50,8 +51,14 @@ object Canonicalizer {
       .drop("repkey")
   }
 
-  /** The dictionary side of the mention → surface join, optionally
-    * broadcast-hinted. The hint matters when true: left to its own
+  /** The one surface-dictionary lookup: `df`'s rows whose surface id
+    * `key` (by default the [[Linker.sid]] of `df`'s etype, norm_name
+    * and link_target) is in `surfClusters`, plus the dictionary
+    * columns `cols` — one `Long` equi-join against the dictionary's
+    * `sid`. Exact: every key looked up is an entity surface, and
+    * [[Linker.matchEdgesFrom]] fails on a `sid` collision.
+    *
+    * The broadcast hint (`broadcastDict`) matters: left to its own
     * stats Catalyst picked BuildLeft here — broadcasting the
     * corpus-scale MENTIONS side and streaming the dictionary, which
     * (a) OOMs outright at scale and (b) leaves the output with the
@@ -59,29 +66,22 @@ object Canonicalizer {
     * map side (profiled: one 136s task). But the hint is UNSAFE for an
     * oversized dictionary (forces a broadcast past the 8GB limit /
     * driver OOM where un-hinted Catalyst would fall back to shuffle),
-    * so every caller threads the same size gate Pipeline.run uses —
-    * hint only under [[graft.Pipeline.SaltedMembershipRows]]. */
-  private def dict(surfClusters: DataFrame, cols: Seq[org.apache.spark.sql.Column],
-      broadcastDict: Boolean): DataFrame = {
-    val d = surfClusters.select(
-      (Seq(col("etype").as("s_etype"), col("norm_name").as("s_norm"),
-        col("link_target").as("s_link")) ++ cols): _*)
-    if (broadcastDict) broadcast(d) else d
+    * so [[prototypes]] takes the size gate Pipeline.run uses — hint
+    * only under [[graft.Pipeline.SaltedMembershipRows]]. */
+  private[graft] def lookup(df: DataFrame, surfClusters: DataFrame, cols: Seq[Column],
+      key: Column = Linker.sid(col("etype"), col("norm_name"), col("link_target")),
+      broadcastDict: Boolean = true): DataFrame = {
+    val d = surfClusters.select(col("sid") +: cols: _*)
+    df.withColumn("sid", key).join(if (broadcastDict) broadcast(d) else d, "sid").drop("sid")
   }
 
-  private def dictCond: org.apache.spark.sql.Column =
-    col("etype") === col("s_etype") && col("norm_name") === col("s_norm") &&
-      col("link_target") <=> col("s_link")
-
-  /** Mention-level memberships (conf = 1.0, reference constant).
-    * `broadcastDict=false` for oversized dictionaries (see [[dict]];
-    * the hot-key-safe alternative is [[membershipsSalted]]). */
-  def memberships(mentions: Dataset[Mention], surfClusters: DataFrame,
-      broadcastDict: Boolean = true): Dataset[Membership] = {
+  /** Mention-level memberships (conf = 1.0, reference constant); the
+    * hot-key-safe form for an oversized dictionary is
+    * [[membershipsSalted]]. */
+  def memberships(mentions: Dataset[Mention], surfClusters: DataFrame): Dataset[Membership] = {
     val spark = mentions.sparkSession
     import spark.implicits._
-    mentions.toDF()
-      .join(dict(surfClusters, Seq(col("cluster_id")), broadcastDict), dictCond)
+    lookup(mentions.toDF(), surfClusters, Seq(col("cluster_id")))
       .select(col("cluster_id"), col("mention_id").as("member_id"),
         lit(1.0).as("conf"))
       .as[Membership]
@@ -101,7 +101,7 @@ object Canonicalizer {
     * Scale shape: one mention-scale shuffle (the first groupBy, hot
     * keys absorbed by partial agg), then two compact aggregations over
     * ≤3 rows per (cluster, attr, value). `broadcastDict` as in
-    * [[memberships]]. */
+    * [[lookup]]. */
   def prototypes(mentions: Dataset[Mention], surfClusters: DataFrame,
       broadcastDict: Boolean = true): Dataset[Prototype] = {
     val spark = mentions.sparkSession
@@ -110,10 +110,9 @@ object Canonicalizer {
     // the dictionary row), so they are aggregated, not grouped —
     // the mention-scale hash aggregation hashes 4 key strings per row
     // instead of 6 (round 6; identical groups either way)
-    val attrCnt = mentions.toDF()
-      .join(dict(surfClusters,
+    val attrCnt = lookup(mentions.toDF(), surfClusters,
         Seq(col("cluster_id"), col("prototype_id"), col("kind").as("s_kind")),
-        broadcastDict), dictCond)
+        broadcastDict = broadcastDict)
       .groupBy(col("cluster_id"),
         col("name"), col("etype"), col("link_target"))
       .agg(count(lit(1)).as("cnt"),
@@ -154,17 +153,14 @@ object Canonicalizer {
 
   /** The [[Justifications.annotatedMembers]] frame realized DIRECTLY
     * from the surface dictionary (round 6, guide §2.4): memberships
-    * are themselves mentions⋈dict ([[memberships]]), so the 1:1
+    * are themselves a mention lookup ([[memberships]]), so the 1:1
     * member_id join-back the generic path pays — a corpus-scale
     * sort-merge of memberships against mentions — is algebraically
-    * redundant. One dictionary join over mentions (broadcast under the
-    * same `dictFits` gate callers thread to [[memberships]]), zero
+    * redundant. One broadcast dictionary lookup over mentions, zero
     * mention-scale shuffles, identical rows: (member_id, cluster_id,
     * mention conv/turn/span/conf/link_target). */
-  def annotatedMembers(mentions: Dataset[Mention], surfClusters: DataFrame,
-      broadcastDict: Boolean = true): DataFrame =
-    mentions.toDF()
-      .join(dict(surfClusters, Seq(col("cluster_id")), broadcastDict), dictCond)
+  def annotatedMembers(mentions: Dataset[Mention], surfClusters: DataFrame): DataFrame =
+    lookup(mentions.toDF(), surfClusters, Seq(col("cluster_id")))
       .select(col("mention_id").as("member_id"), col("cluster_id"),
         col("conv_id"), col("turn_idx"), col("start_off"), col("end_off"),
         col("conf"), col("link_target"))
@@ -181,22 +177,17 @@ object Canonicalizer {
     * the surface dictionary exceeds the broadcast threshold and the
     * hot surface (one name in ~30% of turns) would otherwise land in
     * a single sort-merge partition (SURVEY.md §7.4.3; see
-    * [[graft.link.SkewJoin]]). NILs are joined through a sentinel so
-    * salting keeps null-safe-equality semantics. Result ≡
-    * [[memberships]]. */
+    * [[graft.link.SkewJoin]]). Salts the [[Linker.sid]] equi-join of
+    * [[lookup]]. Result ≡ [[memberships]]. */
   def membershipsSalted(mentions: Dataset[Mention], surfClusters: DataFrame,
       salts: Int = 16): Dataset[Membership] = {
     val spark = mentions.sparkSession
     import spark.implicits._
-    val sentinel = "\u0001nil"
-    val large = mentions.toDF()
-      .withColumn("lt", coalesce(col("link_target"), lit(sentinel)))
-      .select(col("mention_id"), col("etype"), col("norm_name"), col("lt"))
-    val small = surfClusters
-      .select(col("etype"), col("norm_name"),
-        coalesce(col("link_target"), lit(sentinel)).as("lt"), col("cluster_id"))
+    val large = mentions.toDF().select(col("mention_id"),
+      Linker.sid(col("etype"), col("norm_name"), col("link_target")).as("sid"))
+    val small = surfClusters.select(col("sid"), col("cluster_id"))
     graft.link.SkewJoin
-      .salted(large, small, Seq("etype", "norm_name", "lt"), col("mention_id"), salts)
+      .salted(large, small, Seq("sid"), col("mention_id"), salts)
       .select(col("cluster_id"), col("mention_id").as("member_id"), lit(1.0).as("conf"))
       .as[Membership]
   }

@@ -42,26 +42,19 @@ object EventCoref {
     keyed(events, argKeysFrom(eventArgs.join(m.hint("merge"), "arg_id")))
   }
 
-  /** [[keyedEvents]] resolved through a BROADCASTABLE surface
+  /** [[keyedEvents]] resolved through the broadcast surface
     * dictionary instead of corpus-scale memberships (round 6, guide
     * §8): a mention's membership is a pure function of its surface,
     * and [[graft.schema.EventArg]] carries the arg's surface key from
     * extraction, so under the same `dictFits` gate the pipeline
     * threads to [[Canonicalizer.memberships]] the arg⋈membership
     * sort-merge (two corpus-scale shuffle+sorts) collapses to one
-    * broadcast hash join. Result ≡ [[keyedEvents]] — pinned by
-    * EventGoldenSpec's parity test. */
+    * broadcast [[Canonicalizer.lookup]]. Result ≡ [[keyedEvents]] —
+    * pinned by EventGoldenSpec's parity test. */
   def keyedEventsViaDict(events: Dataset[Mention], eventArgs: DataFrame,
-      surfClusters: DataFrame, broadcastDict: Boolean = true): DataFrame = {
-    val d0 = surfClusters.select(col("etype").as("s_etype"),
-      col("norm_name").as("s_norm"), col("link_target").as("s_link"),
-      col("cluster_id").as("arg_cluster"))
-    val d = if (broadcastDict) broadcast(d0) else d0
-    val resolved = eventArgs.join(d,
-      col("etype") === col("s_etype") && col("norm_name") === col("s_norm") &&
-        (col("link_target") <=> col("s_link")))
-    keyed(events, argKeysFrom(resolved))
-  }
+      surfClusters: DataFrame): DataFrame =
+    keyed(events, argKeysFrom(Canonicalizer.lookup(eventArgs, surfClusters,
+      Seq(col("cluster_id").as("arg_cluster")))))
 
   /** Per-event sorted role:cluster key from arg rows that carry an
     * `arg_cluster` column (≤ a handful of rows per event). */
@@ -119,6 +112,9 @@ object EventCoref {
       .as[Prototype]
   }
 
+  /** Participant names kept per event by [[namedFrames]]. */
+  private val MaxParticipants = 16
+
   /** ID-insensitive named event frames for golden comparison: one row
     * per event cluster with the event type and the canonical (entity
     * prototype) names of its Subject / Object / Place arguments —
@@ -127,8 +123,7 @@ object EventCoref {
     * same contract as [[graft.superedge.SuperEdges.namedTriples]]. */
   def namedFrames(keyed: DataFrame, eventArgs: DataFrame,
       entityMemberships: Dataset[Membership],
-      entityPrototypes: Dataset[Prototype],
-      maxParticipants: Int = 16): DataFrame = {
+      entityPrototypes: Dataset[Prototype]): DataFrame = {
     val m = entityMemberships.toDF()
       .select(col("member_id").as("arg_id"), col("cluster_id").as("arg_cluster"))
     val pnames = entityPrototypes.toDF()
@@ -136,7 +131,7 @@ object EventCoref {
     // Participant is LIST-valued (reference: per-type argument lists,
     // update_kg/Updater.py:329-345): collect a SORTED, RANK-GATED
     // sample per event — the rank window is bounded per (event, role),
-    // and the `when` leaves rows past maxParticipants as nulls that
+    // and the `when` leaves rows past MaxParticipants as nulls that
     // collect_list skips, so a pathological mega-arity event can never
     // materialize an unbounded row (the 2GB-row hazard class)
     val w = Window.partitionBy(col("event_id"), col("role"))
@@ -154,7 +149,7 @@ object EventCoref {
         // SAME prototype name (the reference's per-type entity lists
         // are name-level) — without it "A, A" leaks into the frame key
         nullif(array_join(array_distinct(array_sort(collect_list(
-          when(col("role") === "Participant" && col("rn") <= maxParticipants,
+          when(col("role") === "Participant" && col("rn") <= MaxParticipants,
             col("arg_name"))))), ", "), lit("")).as("participants"))
     keyed.select(col("event_id"), col("cluster_id"), col("etype"))
       .join(argNames, "event_id")

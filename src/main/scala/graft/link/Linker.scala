@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.schema.{MatchEdge, Mention}
@@ -34,16 +34,10 @@ object Linker {
 
   /** Distinct surface forms with a deterministic Long id.
     * Output columns: sid, etype, norm_name, link_target, n_mentions,
-    * skey. Ids are xxhash64 of the unambiguous surface key — a pure
-    * codegen projection (no global sort, no RDD round-trip), stable
-    * across runs and parallelism levels (determinism contract,
-    * SURVEY.md §7.4). The key joins its fields with \u0001 (escape) and maps a
-    * NULL link_target to a \u0002-escape sentinel, so distinct tuples never
-    * collide into one key and null stays distinct from "". 64-bit id
-    * collisions are vanishingly rare below ~10^9 distinct surfaces;
-    * [[matchEdgesFrom]] checks countDistinct(sid)==count(*) on the same
-    * job that computes the IDF corpus size and fails loudly rather
-    * than silently merging. */
+    * skey. `skey` is the surface key and `sid` its id ([[sid]]) — a
+    * pure codegen projection (no global sort, no RDD round-trip),
+    * stable across runs and parallelism levels (determinism contract,
+    * SURVEY.md §7.4). */
   def surfaces(mentions: Dataset[Mention]): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
@@ -51,11 +45,25 @@ object Linker {
       .filter($"kind" === "entity")
       .groupBy($"etype", $"norm_name", $"link_target")
       .agg(count(lit(1)).as("n_mentions"))
-      .withColumn("skey",
-        concat_ws("\u0001", $"etype", $"norm_name",
-          coalesce($"link_target", lit("\u0002"))))
+      .withColumn("skey", skey($"etype", $"norm_name", $"link_target"))
       .withColumn("sid", xxhash64($"skey"))
   }
+
+  /** The surface key: the fields joined with \u0001 (escape), each
+    * NULL field mapped to a \u0002-escape sentinel, so distinct tuples
+    * never collide into one key and null stays distinct from "". */
+  private def skey(etype: Column, norm: Column, link: Column): Column =
+    concat_ws("\u0001", Seq(etype, norm, link).map(coalesce(_, lit("\u0002"))): _*)
+
+  /** The surface id of (etype, norm, link): xxhash64 of its surface
+    * key. Every dictionary lookup is one `Long` equi-join of this
+    * expression on the looked-up side against [[surfaces]]' `sid`.
+    * 64-bit id collisions are vanishingly rare below ~10^9 distinct
+    * surfaces; [[matchEdgesFrom]] checks countDistinct(sid)==count(*)
+    * on the same job that computes the IDF corpus size and fails
+    * loudly rather than silently merging. */
+  def sid(etype: Column, norm: Column, link: Column): Column =
+    xxhash64(skey(etype, norm, link))
 
   /** Per-surface weighted token vectors over SORTED-CHAR-MULTISET
     * keys ("cyberdyne" and its transposition typo "cybredyne" map to
@@ -85,19 +93,17 @@ object Linker {
       .select($"sid", $"etype", $"tok", $"w")
   }
 
-  /** Candidate pairs (sid1 < sid2) from two blocking-key families:
-    * (etype, informative token) and non-NIL (etype, link_target).
-    * Oversized blocks are dropped (cap), bounding join fan-out — the
-    * explicit skew defense on hot names (SURVEY.md §7.4.3). */
-  private[link] def candidatePairs(surf: DataFrame, toks: DataFrame, cfg: Config): DataFrame = {
-    val spark = surf.sparkSession
+  /** Candidate pairs (sid1 < sid2) sharing an (etype, informative
+    * token) block. Oversized blocks are dropped (cap), bounding join
+    * fan-out — the explicit skew defense on hot names (SURVEY.md
+    * §7.4.3). Surfaces sharing a non-NIL link target need no candidate
+    * here: [[matchEdgesFrom]] star-connects each such group. */
+  private[link] def candidatePairs(toks: DataFrame, cfg: Config): DataFrame = {
+    val spark = toks.sparkSession
     import spark.implicits._
-    val tokKeys = toks
+    val keys = toks
       .filter($"tok".startsWith("s:")) // initial tokens don't block-match
       .select($"sid", concat_ws("\u0001", $"etype", $"tok").as("bkey"))
-    val linkKeys = surf.filter($"link_target".isNotNull)
-      .select($"sid", concat_ws("\u0001", $"etype", lit("L:"), $"link_target").as("bkey"))
-    val keys = tokKeys.unionByName(linkKeys)
     val sizes = keys.groupBy($"bkey").agg(count(lit(1)).as("bsz"))
       .filter($"bsz" >= 2 && $"bsz" <= cfg.maxBlock)
     val kept = keys.join(sizes, "bkey").select($"bkey", $"sid")
@@ -167,13 +173,13 @@ object Linker {
     require(nSurf == nSid,
       s"surface id hash collision: $nSurf surfaces, $nSid distinct sids")
     val toks = graft.util.Blocks.checkpoint(tokenVectors(surf, cfg, nSurf))._1
-    val pairs = candidatePairs(surf, toks, cfg)
+    val pairs = candidatePairs(toks, cfg)
     // suffix veto: "acme corp" vs "acme group" share a rare stem but
     // denote different organizations — when both names end in a known
     // (already synonym-normalized) org suffix and the suffixes differ,
     // the pair can never match on cosine alone
     val sufList = graft.extract.Lexicon.orgSuffixes.toSeq.map(graft.extract.Lexicon.normToken).distinct
-    def sufOf(c: org.apache.spark.sql.Column) = {
+    def sufOf(c: Column) = {
       val last = element_at(split(c, " "), -1)
       when(last.isin(sufList: _*), last)
     }

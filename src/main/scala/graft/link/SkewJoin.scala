@@ -27,24 +27,20 @@ object SkewJoin {
    * large ⋈ small on `keys`, salting the large side by
    * `largeSaltSource` (any per-row-distinct column, e.g. mention_id).
    *
-   * Semantics identical to `large.join(small, keys, joinType)` for
-   * joinType in {inner, left_outer}: every large row carries exactly
-   * one salt value and every (key, salt) combination exists on the
-   * replicated small side.
+   * Semantics identical to the inner `large.join(small, keys)`: every
+   * large row carries exactly one salt value and every (key, salt)
+   * combination exists on the replicated small side.
    */
   def salted(
       large: DataFrame,
       small: DataFrame,
       keys: Seq[String],
       largeSaltSource: Column,
-      salts: Int = 16,
-      joinType: String = "inner"): DataFrame = {
+      salts: Int = 16): DataFrame = {
     require(salts >= 1, "salts must be >= 1")
-    require(joinType == "inner" || joinType == "left_outer",
-      s"salted join supports inner/left_outer, got $joinType")
     val l = large.withColumn("_salt", pmod(xxhash64(largeSaltSource), lit(salts.toLong)))
     val s = small.withColumn("_salt",
       explode(sequence(lit(0L), lit(salts.toLong - 1))))
-    l.join(s, keys :+ "_salt", joinType).drop("_salt")
+    l.join(s, keys :+ "_salt").drop("_salt")
   }
 }

@@ -33,7 +33,12 @@ object Dedup {
         i => norm.substr(i, lit(k))))
   }
 
-  /** MinHash signatures: K permutations of word-k-shingle hashes via
+  /** Shingle widths: words per [[minHashSignatures]] shingle, chars per
+    * [[hashedShingles]] (and so [[ngramJaccard]]) shingle. */
+  private val WordShingleK = 3
+  private val CharShingleK = 5
+
+  /** MinHash signatures: K permutations of word-3-shingle hashes via
     * the Carter-Wegman affine family h_i = h1 + i·h2 (2 xxh64 calls
     * per shingle for all K minima); signature[i] = min over shingles.
     *
@@ -43,9 +48,9 @@ object Dedup {
     * per-element interpreted lambda evaluation (the equivalent
     * aggregate/zip_with/transform Column tree measured ~30× slower:
     * higher-order functions don't codegen). */
-  def minHashSignatures(docs: DataFrame, k: Int = 3, numHashes: Int = 16): DataFrame =
+  def minHashSignatures(docs: DataFrame, numHashes: Int = 16): DataFrame =
     docs.select(col("doc_id"),
-      call_function("graft_minhash_sig", col("text"), lit(k), lit(numHashes))
+      call_function("graft_minhash_sig", col("text"), lit(WordShingleK), lit(numHashes))
         .as("signature"))
 
   /** LSH banding: near-dup candidate pairs = docs sharing ≥1 band of
@@ -174,9 +179,9 @@ object Dedup {
     * reuses the KG pipeline's CC operator.
     * Output: (doc_id, canon_id, is_dup). */
   def nearDupClusters(docs: DataFrame, jaccardThreshold: Double = 0.8,
-      k: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 2,
+      numHashes: Int = 16, rowsPerBand: Int = 2,
       maxBucketSize: Int = 1024, minEstimate: Double = 0.0): DataFrame = {
-    val cand = minHashCandidates(minHashSignatures(docs, k, numHashes),
+    val cand = minHashCandidates(minHashSignatures(docs, numHashes),
       rowsPerBand, numHashes, maxBucketSize, minEstimate)
     val verified = ngramJaccard(docs, cand, minJaccard = jaccardThreshold)
       .filter(col("jaccard") >= jaccardThreshold)
@@ -195,7 +200,7 @@ object Dedup {
       .withColumn("is_dup", col("doc_id") =!= col("canon_id"))
   }
 
-  /** Hashed char-k shingle set of the normalized text: sorted distinct
+  /** Hashed char-5 shingle set of the normalized text: sorted distinct
     * 64-bit hashes via one native projection
     * ([[graft.functions.Shingles64Expr]]). Set SIZES — and so every
     * Jaccard value — equal the exact string formulation w.h.p.
@@ -205,8 +210,8 @@ object Dedup {
     * (measured: 76 s to merely SCAN string shingles over 267k
     * conversation docs vs ~1 s for the minhash kernel on the same
     * corpus — HOFs don't codegen). */
-  def hashedShingles(text: Column, k: Int = 5): Column =
-    call_function("graft_shingles64", text, lit(k))
+  def hashedShingles(text: Column): Column =
+    call_function("graft_shingles64", text, lit(CharShingleK))
 
   /** n-gram Jaccard similarity for (doc_a, doc_b) candidate pairs —
     * the verification stage after LSH blocking. Shingle sets are
@@ -229,16 +234,16 @@ object Dedup {
     * < minJaccard); with the default `minJaccard = 0` every candidate
     * pair is scored, bit-identically to the unfiltered formulation
     * (OpsSpec pins equality). */
-  def ngramJaccard(docs: DataFrame, pairs: DataFrame, k: Int = 5,
+  def ngramJaccard(docs: DataFrame, pairs: DataFrame,
       minJaccard: Double = 0.0): DataFrame = {
-    val shingled = docs.select(col("doc_id"), hashedShingles(col("text"), k).as("sh"))
+    val shingled = docs.select(col("doc_id"), hashedShingles(col("text")).as("sh"))
     val pre =
       if (minJaccard <= 0.0) pairs
       else {
         // distinct-count projection: the shingle array is transient
         // inside this projection — only (doc_id, n_sh) is emitted
         val counts = docs.select(col("doc_id"),
-          size(hashedShingles(col("text"), k)).as("n_sh"))
+          size(hashedShingles(col("text"))).as("n_sh"))
         pairs
           .join(counts.withColumnRenamed("doc_id", "doc_a")
             .withColumnRenamed("n_sh", "n_a"), "doc_a")

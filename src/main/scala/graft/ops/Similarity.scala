@@ -39,12 +39,11 @@ object Similarity {
   /** All-pairs near-duplicate detection by embedding cosine ≥ τ —
     * the embedding-cosine near-dup dedup operator, LSH-blocked with
     * BANDING + MULTI-PROBE (candidates = pairs whose bucket ids agree
-    * within Hamming distance ≤ `probeHamming` in ANY of `nBands`
-    * independently-seeded hyperplane families), then verified with
-    * exact cosine. The single-bucket formulation this replaces missed
-    * ~47% of true pairs at τ=0.95 ((1−θ/π)^6 ≈ 0.53 collision per
-    * pair); with the defaults here (8 bits × 6 bands × Hamming-1
-    * probing) a τ=0.95 pair is missed with probability
+    * within Hamming distance ≤ 1 in ANY of 6 independently-seeded
+    * hyperplane families), then verified with exact cosine. The
+    * single-bucket formulation this replaces missed ~47% of true pairs
+    * at τ=0.95 ((1−θ/π)^6 ≈ 0.53 collision per pair); at 8 bits × 6
+    * bands × Hamming-1 probing a τ=0.95 pair is missed with probability
     * (1 − p⁸ − 8p⁷(1−p))⁶ ≈ 4.9e-5 at p = 1−acos(.95)/π ≈ 0.899, and
     * planted near-exact duplicates (sim ≥ 0.99) are effectively never
     * missed (< 1e-9) — recall is driver-checked against the exact
@@ -54,40 +53,34 @@ object Similarity {
     * (vec_id, band, bucket) table of longs — embeddings are joined
     * back only for the (candidate-sized) verification stage. Per-band
     * candidate cost is Σ_bucket |bucket|², so bucket POPULATION, not
-    * n, bounds the quadratic term — which is why `nBits` defaults to
-    * AUTO (`nBits = 0`): the embedding checkpoint's row count (no
-    * extra job) sizes it as log2(n / targetBucketSize) clamped to
-    * [8, 24], so a caller feeding 10⁹ vectors without reading this doc
-    * gets ~22-bit buckets (≈256 rows each) instead of 8-bit buckets
-    * holding 4M rows apiece (an accidental all-pairs). More bits per
-    * band lowers per-band collision probability; recall is restored
-    * by the band count and multi-probing, and the planted-dup miss
-    * bound in the oracle holds at any nBits ≥ 8 (p^nBits terms only
-    * sharpen the S-curve). */
-  def cosinePairs(embeddings: DataFrame, threshold: Double = 0.95,
-      nBits: Int = 0, nBands: Int = 6, probeHamming: Int = 1,
-      seed: Int = 42): DataFrame = {
+    * n, bounds the quadratic term — which is why the bucket width is
+    * sized from the embedding checkpoint's row count (no extra job,
+    * [[autoBits]]): 10⁹ vectors get ~22-bit buckets (≈256 rows each)
+    * instead of 8-bit buckets holding 4M rows apiece (an accidental
+    * all-pairs). More bits per band lowers per-band collision
+    * probability; recall is restored by the band count and
+    * multi-probing, and the planted-dup miss bound in the oracle holds
+    * at any width ≥ 8 (p^bits terms only sharpen the S-curve). The
+    * result is a measured checkpoint ([[graft.util.Blocks.checkpoint]])
+    * that pins nothing else. */
+  def cosinePairs(embeddings: DataFrame, threshold: Double = 0.95): DataFrame = {
     // materialize the caller's upstream plan exactly ONCE before
-    // anything else; the auto-nBits row count rides that job
+    // anything else; the bucket-width row count rides that job
     val (raw, n) = graft.util.Blocks.checkpoint(
       embeddings.select(col("vec_id"), col("embedding")))
-    val bits = if (nBits > 0) nBits else autoBits(n)
+    val bits = autoBits(n)
     // one kernel eval per (vector, band): the slim exploded
     // (vec_id, band, bucket) longs are checkpointed once; both join
     // sides scan the materialized longs, never the kernels, and the
     // verify stage joins embeddings back from `raw`
     val slim = graft.util.Blocks.checkpoint(raw.select(col("vec_id"),
-        posexplode(array((0 until nBands).map(bd =>
+        posexplode(array((0 until Bands).map(bd =>
           call_function("graft_lsh_bucket", col("embedding"), lit(bits),
-            lit(seed + bd * 7919))): _*)).as(Seq("band", "bucket"))))._1
+            lit(Seed + bd * 7919))): _*)).as(Seq("band", "bucket"))))._1
     // multi-probe one side only: pair (a,b) collides iff
-    // Hamming(bucket_a, bucket_b) ≤ h in some band — XOR-flipping side
-    // a's bucket by every ≤h mask covers exactly that set
-    def flips(base: Long, fromBit: Int, left: Int): Seq[Long] =
-      if (left == 0) Seq(base)
-      else (fromBit until bits).flatMap(bit =>
-        flips(base ^ (1L << bit), bit + 1, left - 1))
-    val masks = (0 to probeHamming).flatMap(h => flips(0L, 0, h)).distinct
+    // Hamming(bucket_a, bucket_b) ≤ 1 in some band — XOR-flipping side
+    // a's bucket by 0 and by every one-bit mask covers exactly that set
+    val masks = 0L +: (0 until bits).map(1L << _)
     val probed = slim.select(col("vec_id"), col("band"),
       explode(array(masks.map(m =>
         col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
@@ -96,22 +89,29 @@ object Similarity {
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
-    candPairs
+    // the verified pairs are materialized so both inputs' blocks can
+    // go now; the caller owns (and may release) the returned frame
+    val (pairs, _) = graft.util.Blocks.checkpoint(candPairs
       .join(raw.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
       .join(raw.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         round(cosine(col("emb_a"), col("emb_b")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= threshold))
+    graft.util.Blocks.releaseAll(Seq(raw, slim))
+    pairs
   }
 
+  /** [[cosinePairs]]' hyperplane families and their base seed. */
+  private val Bands = 6
+  private val Seed = 42
+
   /** Auto-sized hyperplane-bucket width for [[cosinePairs]]:
-    * log2(n / targetBucketSize) clamped to [8, 24] — ≈256-row buckets
-    * at any corpus size, so the per-band Σ|bucket|² candidate term
-    * stays linear-ish in n instead of quadratic in an under-split
-    * bucket population. */
-  private[graft] def autoBits(n: Long, targetBucketSize: Long = 256L): Int = {
+    * log2(n / 256) clamped to [8, 24] — ≈256-row buckets at any corpus
+    * size, so the per-band Σ|bucket|² candidate term stays linear-ish
+    * in n instead of quadratic in an under-split bucket population. */
+  private[graft] def autoBits(n: Long): Int = {
     val raw = math.ceil(
-      math.log(math.max(n, 1L).toDouble / targetBucketSize) / math.log(2.0)).toInt
+      math.log(math.max(n, 1L).toDouble / 256L) / math.log(2.0)).toInt
     math.min(24, math.max(8, raw))
   }
 

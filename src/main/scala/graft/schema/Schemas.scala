@@ -51,7 +51,8 @@ final case class Mention(
   * The argument mentions' SURFACE KEYS are carried denormalized from
   * extraction (round 6, same rationale as [[EventArg]]): a mention's
   * cluster is a pure function of its surface, so a broadcastable
-  * dictionary resolves both argument clusters from these ~40 bytes —
+  * dictionary resolves both argument clusters from their
+  * [[graft.link.Linker.sid]]s —
   * [[graft.superedge.SuperEdges.resolvedStatementsViaDict]] — instead
   * of two corpus-scale membership sort-merges. Null-defaulted so
   * surface-less fixtures (the oracle fabrications, tests) keep the
@@ -83,7 +84,8 @@ final case class Statement(
   * carried denormalized from extraction (round 6, guide §8 "shuffle
   * keys and metadata instead of payloads"): membership of a mention is
   * a pure function of its surface, so a broadcastable surface
-  * dictionary resolves the arg's cluster from these ~30 bytes directly
+  * dictionary resolves the arg's cluster from its
+  * [[graft.link.Linker.sid]] directly
   * — [[graft.canon.EventCoref.keyedEventsViaDict]] — instead of
   * sort-merging the arg table against corpus-scale memberships. */
 final case class EventArg(
@@ -97,11 +99,6 @@ final case class EventArg(
 /** Cross-mention match edge produced by the linker (blocking +
   * scoring); input to connected components. */
 final case class MatchEdge(src: Long, dst: Long)
-
-/** aida:SameAsCluster analog (reference: update_kg/Updater.py:571-578).
-  * IDs are deterministic content hashes, replacing the reference's
-  * random suffixes (update_kg/Updater.py:156-158 — see SURVEY.md §7.4). */
-final case class Cluster(cluster_id: String, prototype_id: String, kind: String)
 
 /** aida:ClusterMembership analog; conf is constant 1.0 in the
   * reference (update_kg/Updater.py:565). */

@@ -3,6 +3,8 @@ package graft.superedge
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.canon.Canonicalizer
+import graft.link.Linker
 import graft.schema.{Membership, Prototype, Statement, SuperEdge, Triple}
 
 /**
@@ -52,35 +54,21 @@ object SuperEdges {
         .hint("merge"), "obj")
   }
 
-  /** [[resolvedStatements]] resolved through a BROADCASTABLE surface
+  /** [[resolvedStatements]] resolved through the broadcast surface
     * dictionary instead of corpus-scale memberships (round 6, guide
     * §8): a mention's cluster is a pure function of its surface, and
     * [[graft.schema.Statement]] carries both argument surface keys
     * from extraction, so under the caller's `dictFits` gate the two
-    * membership sort-merges collapse to two broadcast hash joins.
-    * Result ≡ [[resolvedStatements]] (PipelineGoldenSpec parity);
-    * callers whose statements carry no surface keys (fixtures) must
-    * use the membership path. */
+    * membership sort-merges collapse to two broadcast [[Linker.sid]]
+    * lookups ([[Canonicalizer.lookup]]). Result ≡ [[resolvedStatements]]
+    * (PipelineGoldenSpec parity); callers whose statements carry no
+    * surface keys (fixtures) must use the membership path. */
   def resolvedStatementsViaDict(statements: Dataset[Statement],
-      surfClusters: DataFrame, broadcastDict: Boolean = true): DataFrame = {
-    def dictFor(p: String, out: String): DataFrame = {
-      val d = surfClusters.select(col("etype").as(s"${p}_d_etype"),
-        col("norm_name").as(s"${p}_d_norm"),
-        col("link_target").as(s"${p}_d_link"), col("cluster_id").as(out))
-      if (broadcastDict) broadcast(d) else d
-    }
-    statements.toDF()
-      .join(dictFor("s", "subj_cluster"),
-        col("subj_etype") === col("s_d_etype") &&
-          col("subj_norm") === col("s_d_norm") &&
-          (col("subj_link") <=> col("s_d_link")))
-      .join(dictFor("o", "obj_cluster"),
-        col("obj_etype") === col("o_d_etype") &&
-          col("obj_norm") === col("o_d_norm") &&
-          (col("obj_link") <=> col("o_d_link")))
-      .drop("s_d_etype", "s_d_norm", "s_d_link",
-        "o_d_etype", "o_d_norm", "o_d_link")
-      .drop(SurfaceCols: _*)
+      surfClusters: DataFrame): DataFrame = {
+    def resolve(df: DataFrame, arg: String): DataFrame =
+      Canonicalizer.lookup(df, surfClusters, Seq(col("cluster_id").as(s"${arg}_cluster")),
+        Linker.sid(col(s"${arg}_etype"), col(s"${arg}_norm"), col(s"${arg}_link")))
+    resolve(resolve(statements.toDF(), "subj"), "obj").drop(SurfaceCols: _*)
   }
 
   /** SuperEdge aggregate over a precomputed [[resolvedStatements]]

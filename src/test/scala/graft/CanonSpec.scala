@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.canon.Canonicalizer
+import graft.canon.{Canonicalizer, EventCoref}
 import graft.link.Linker
-import graft.schema.{Mention, Statement}
+import graft.schema.{EventArg, Membership, Mention, Statement}
 import graft.superedge.SuperEdges
 
 class CanonSpec extends AnyFunSuite {
@@ -70,5 +70,58 @@ class CanonSpec extends AnyFunSuite {
     val byCnt = se.map(e => e.cnt -> e.conf).toMap
     assert(byCnt(3L) == 1.0 - 1.0 / 6.0)
     assert(byCnt(1L) == 0.5)
+  }
+
+  test("every dictionary lookup is the sid join: null links stay apart from \"\", null names resolve") {
+    import spark.implicits._
+    val nullNorm = Mention("m5", "c0", 0, "entity", "Person", "Alpha", null, 0, 5, 0.9, null)
+    val ms = Seq(m("m1", "Alpha"), m("m2", "Alpha", link = ""), m("m3", "Alpha", link = "kb:A"),
+      m("m4", "Alpha"), nullNorm, m("m6", "Alpha", etype = "Organization"))
+    val mentions = ms.toDS()
+    val surf = Linker.surfaces(mentions)
+    // no match edges: every surface is its own cluster
+    val comp = Seq.empty[(Long, Long)].toDF("sid", "component")
+    val sc = Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp)).localCheckpoint(true)
+    // the reference lookup: the three strings, null-safe on the link
+    // target only, so it drops the null-norm_name mention
+    val refJoin = mentions.toDF().as("m").join(sc.as("s"),
+        col("m.etype") === col("s.etype") && col("m.norm_name") === col("s.norm_name") &&
+          (col("m.link_target") <=> col("s.link_target")))
+      .select(col("m.mention_id"), col("s.cluster_id")).as[(String, String)].collect().toMap
+    assert(!refJoin.contains("m5"))
+    val nullNormCluster = sc.filter(col("norm_name").isNull).select("cluster_id").as[String].head()
+    val expected = refJoin + ("m5" -> nullNormCluster)
+    assert(expected.size == ms.size)
+    assert(expected("m1") == expected("m4"))
+    assert(expected("m1") != expected("m2")) // null and "" link targets
+    assert(expected.values.toSet.size == 5)
+
+    val got = Canonicalizer.memberships(mentions, sc).collect()
+      .map(x => x.member_id -> x.cluster_id).toMap
+    assert(got == expected)
+    val protoCounts = Canonicalizer.prototypes(mentions, sc).collect()
+      .map(p => p.cluster_id -> p.n_members).toMap
+    assert(protoCounts == expected.groupBy(_._2).map { case (c, xs) => c -> xs.size.toLong })
+
+    def st(id: String, a: Mention, b: Mention) = Statement(id, a.mention_id, "Rel",
+      b.mention_id, 0.9, "c0", 0, 0, 1, a.etype, a.norm_name, a.link_target,
+      b.etype, b.norm_name, b.link_target)
+    val pairs = for (a <- ms; b <- ms if a.mention_id < b.mention_id) yield (a, b)
+    val stmts = pairs.map { case (a, b) => st(s"${a.mention_id}-${b.mention_id}", a, b) }.toDS()
+    val resolved = SuperEdges.resolvedStatementsViaDict(stmts, sc)
+      .select("stmt_id", "subj_cluster", "obj_cluster").as[(String, String, String)]
+      .collect().toSet
+    assert(resolved == pairs.map { case (a, b) =>
+      (s"${a.mention_id}-${b.mention_id}", expected(a.mention_id), expected(b.mention_id)) }.toSet)
+
+    val events = ms.map(a => Mention(s"e-${a.mention_id}", "c0", 0, "event", "Meet",
+      "met", "met", 0, 3, 0.9, null)).toDS()
+    val args = ms.flatMap(a => Seq("Subject", "Object").map(role => EventArg(s"e-${a.mention_id}",
+      role, a.mention_id, a.etype, a.norm_name, a.link_target))).toDS().toDF()
+    val refMs = expected.map { case (mid, c) => Membership(c, mid, 1.0) }.toSeq.toDS()
+    def keys(k: org.apache.spark.sql.DataFrame) =
+      k.select("event_id", "cluster_id").as[(String, String)].collect().toSet
+    assert(keys(EventCoref.keyedEventsViaDict(events, args, sc)) ==
+      keys(EventCoref.keyedEvents(events, args, refMs)))
   }
 }

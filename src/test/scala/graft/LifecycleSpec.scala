@@ -64,4 +64,20 @@ class LifecycleSpec extends AnyFunSuite {
     graft.util.Blocks.release(verdicts)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
+
+  test("cosinePairs pins only its (released afterwards) result") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = (0 until 16).map(i => (i.toLong, Seq.tabulate(8)(j => (i + j) / 16.0f)))
+      .toDF("vec_id", "embedding")
+    val pairs = graft.ops.Similarity.cosinePairs(e, threshold = 0.5)
+    assert(pairs.count() > 0)
+    // the embedding and bucket checkpoints must already be gone
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.size <= 1,
+      s"cosinePairs leaked intermediate blocks: ids=${pinned.toSeq.sorted}")
+    graft.util.Blocks.release(pairs)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.link.Linker
-import graft.schema.Mention
+import graft.schema.{MatchEdge, Mention}
 
 class LinkerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -14,11 +14,12 @@ class LinkerSpec extends AnyFunSuite {
     Mention(id, "c0", 0, "entity", etype, name, norm, 0, name.length, 0.9, link)
   }
 
-  private def clusters(ms: Seq[Mention]): Set[Set[String]] = {
+  private def clusters(ms: Seq[Mention],
+      cfg: Linker.Config = Linker.Config()): Set[Set[String]] = {
     import spark.implicits._
     val mentions = ms.toDS()
     val surf = Linker.surfaces(mentions).localCheckpoint(true)
-    val edges = Linker.matchEdgesFrom(surf)
+    val edges = Linker.matchEdgesFrom(surf, cfg)
     val comp = graft.cc.ConnectedComponents.run(edges.toDF())
     val sc = graft.canon.Canonicalizer.withKind(
       graft.canon.Canonicalizer.surfaceClusters(surf, comp))
@@ -82,6 +83,26 @@ class LinkerSpec extends AnyFunSuite {
     val surf = Linker.surfaces(mentions).localCheckpoint(true)
     val edges = Linker.matchEdgesFrom(surf, Linker.Config(maxBlock = 10))
     assert(edges.count() == 0)
+  }
+
+  test("a link group's edges are exactly its star, even with its shared tokens over maxBlock") {
+    import spark.implicits._
+    // the twelve shared tokens sit in blocks of four — the link group
+    // and a NIL copy of its first name — over maxBlock = 3, so no
+    // cosine candidate covers the group, though every pair in it
+    // scores above the threshold
+    val shared = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima"
+    val ms = Seq(m("m1", shared, "Organization", "kb:Z"),
+      m("m2", s"$shared mike", "Organization", "kb:Z"),
+      m("m3", s"$shared november", "Organization", "kb:Z"),
+      m("m4", shared, "Organization"))
+    val cfg = Linker.Config(maxBlock = 3)
+    val surf = Linker.surfaces(ms.toDS()).localCheckpoint(true)
+    val edges = Linker.matchEdgesFrom(surf, cfg).collect().toSet
+    val group = surf.filter($"link_target" === "kb:Z").select($"sid").as[Long].collect()
+    val rep = group.min
+    assert(edges == group.filter(_ != rep).map(MatchEdge(rep, _)).toSet)
+    assert(clusters(ms, cfg) == Set(Set("m1", "m2", "m3"), Set("m4")))
   }
 
   test("surface ids are deterministic across runs") {

@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that matter at 100 TB must be
@@ -13,6 +18,30 @@ class PlanSpec extends AnyFunSuite {
 
   private def planString(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The executed plans of the Dataset actions `body` runs (eager
+    * checkpoints included), in order — for operators whose result is a
+    * checkpoint scan, so the plans that matter ran inside the call. */
+  private def actionPlans(body: => Unit): Seq[String] = {
+    val marker = "plan-spec-marker"
+    val plans = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) markerSeen.countDown()
+        else plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker action is
+      // seen, every action `body` ran has been seen too
+      spark.range(1).select(lit(marker)).collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker action never reported")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
 
   test("filters push down to the parquet scan") {
     val df = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -116,9 +145,21 @@ class PlanSpec extends AnyFunSuite {
     assert(planString(mh).contains("ExistingRDD"), "banding does not scan the checkpoint")
     val e = (0 until 16).map(i => (i.toLong, Seq.tabulate(8)(j => (i + j) / 16.0f)))
       .toDF("vec_id", "embedding")
-    val cp = graft.ops.Similarity.cosinePairs(e, threshold = 0.5)
-    assert(!planString(cp).contains("graft_lsh_bucket"),
-      "lsh bucket kernel re-evaluated inside the bucket self-join")
+    // the result is a checkpoint scan, so audit the plans the call ran:
+    // the bucket kernel runs in exactly one of them (the slim bucket
+    // projection), and the self-join + cosine verify plan scans
+    // checkpoints and evaluates no kernel
+    val ran = actionPlans(graft.util.Blocks.release(
+      graft.ops.Similarity.cosinePairs(e, threshold = 0.5)))
+    val bucketing = ran.filter(_.contains("graft_lsh_bucket"))
+    assert(bucketing.size == 1 && !bucketing.head.contains("graft_cosine"),
+      s"lsh bucket kernel evaluated outside the bucket projection: ${bucketing.mkString("\n---\n")}")
+    val verify = ran.filter(_.contains("graft_cosine"))
+    assert(verify.size == 1, s"expected one verify plan, got: ${ran.mkString("\n---\n")}")
+    assert(!verify.head.contains("graft_lsh_bucket"),
+      s"lsh bucket kernel re-evaluated inside the bucket self-join: ${verify.head}")
+    assert(verify.head.contains("ExistingRDD"),
+      s"bucket self-join does not scan the checkpoint: ${verify.head}")
   }
 
   test("relation-cluster member counts are two-phase aggregation, not a hot-key window") {
